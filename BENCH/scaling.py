@@ -31,11 +31,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: identifies the superstep-kernel generation; a change resets the
 #: per-level best-of history (efficiencies are only comparable within one
-#: kernel version).  r5: superstep kernel unchanged from r4; the tag is
-#: bumped so the round-5 record is a single-session triple (all levels
-#: measured back-to-back on a quiet box, per the judge's protocol) rather
-#: than a best-of merge across days.
-KERNEL_TAG = "uniform-1degree-r5"
+#: kernel version).  "sink-scalar": every superstep caches its gather and
+#: reads the dangling-mass sink group as its one action, also when the
+#: graph has no dangling vertex.
+KERNEL_TAG = "sink-scalar"
 sys.path.insert(0, REPO)
 
 
@@ -72,23 +71,18 @@ def worker(cores: int, pages: int, avg_out: int, iters: int) -> None:
 
     # warmup (JIT, codegen, cache touch), then *differential* timing: the
     # marginal cost of (hi - lo) extra supersteps cancels per-call setup jobs
-    # (out-weight/vinfo builds, dangling count) so we measure sustained
+    # (out-weight/vinfo builds) so we measure sustained
     # superstep throughput, which is what scales with executors
-    oj = os.environ.get("SPARK_GRAFT_SCALING_ONEJOB")
-    oj = None if oj is None else oj == "1"
     lo, hi = max(1, iters // 3), iters
-    pagerank(g, fixed_iters=1, tol=None, shards=adj, shards_min_edges=0,
-             one_job_supersteps=oj).count()
+    pagerank(g, fixed_iters=1, tol=None, shards=adj, shards_min_edges=0).count()
     reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "4"))
     t_los, t_his = [], []
     for _ in range(reps):
         t0 = time.time()
-        pagerank(g, fixed_iters=lo, tol=None, shards=adj, shards_min_edges=0,
-                 one_job_supersteps=oj).count()
+        pagerank(g, fixed_iters=lo, tol=None, shards=adj, shards_min_edges=0).count()
         t_los.append(time.time() - t0)
         t0 = time.time()
-        pagerank(g, fixed_iters=hi, tol=None, shards=adj, shards_min_edges=0,
-                 one_job_supersteps=oj).count()
+        pagerank(g, fixed_iters=hi, tol=None, shards=adj, shards_min_edges=0).count()
         t_his.append(time.time() - t0)
     # Interference-robust differential: on a shared box, noise (GC storms,
     # other tenants — measured 5x swings between identical runs) only ever

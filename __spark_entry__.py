@@ -641,7 +641,7 @@ def _q_incremental_sage_web(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_pagerank_sharded_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The at-scale salted-CSR shard kernel itself (plans/shards.py gather
-    with dangling sink + one-job supersteps), FORCED below the auto-select
+    with dangling sink + sink-read actions), FORCED below the auto-select
     crossover via shards_min_edges=0 — oracle identical to pagerank_web's
     unrolled SQL, so the driver certifies the 100 TB execution path, not
     just the plain-join fallback it delegates to at gate scale."""

@@ -237,7 +237,9 @@ def decode_png(blob: bytes) -> np.ndarray:
     # expected+1 bytes instead of expanding to whatever it claims
     d = zlib.decompressobj()
     raw = d.decompress(b"".join(idat), expected + 1)
-    if len(raw) != expected or d.unconsumed_tail:
+    # not d.eof: the stream stops before its Adler-32 trailer (truncated
+    # IDAT), so the scanlines were never checksummed
+    if len(raw) != expected or not d.eof or d.unconsumed_tail:
         raise ValueError("PNG scanline data size mismatch")
     out = np.zeros((h, stride), dtype=np.uint8)
     bpp = ch  # bytes per pixel at depth 8

@@ -119,6 +119,7 @@ def label_propagation(
         labels = new
         if changed == 0:
             break
+    sym.unpersist()
     return labels
 
 
@@ -179,4 +180,5 @@ def seeded_label_propagation(
             )
             .transform(_mat)
         )
+    sym.unpersist()
     return labels

@@ -13,7 +13,7 @@ variant (personalized_pagerank.rs:24-120).  Pinned conventions:
   ``d·Σ_{u→v} pr[u]·w(u,v)/w_out[u]`` (:102-115)
 - convergence: **L1** ``Σ|pr_new - pr| < tol`` (:117-127); result sums to 1
 
-Spark execution model (per superstep):
+Spark execution model — one superstep shape:
 
 - ``edges_norm(src, dst, w_norm)`` is precomputed once, hash-partitioned by
   ``src`` and cached — the join with the rank vector reuses that partitioning
@@ -22,22 +22,24 @@ Spark execution model (per superstep):
   so hub vertices receive pre-combined messages, not one row per in-edge;
 - dangling mass rides the SAME message shuffle as the gather: every dangling
   vertex gets one virtual edge to the sink id ``-1`` with weight 1, so
-  ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group — no
-  per-superstep semi-join of the rank vector against a dangling-id set (at
-  10^12 vertices that join rebuilds a 10^11-row hash table every
-  iteration).  The 1-row sink group is broadcast back into the update
-  expression; the gathered frame is cached for the superstep since it is
-  read twice (sink extraction + vertex join).  Vertex id ``-1`` is reserved;
-- the L1 delta (when ``tol`` is active) is a single-scalar driver aggregate;
-- every superstep the rank frame is materialized (parquet checkpoint with
-  manifest when a :class:`CheckpointManager` is given, else a
-  partitioning-preserving ``localCheckpoint``) so the plan never grows and
-  the next gather join is exchange-free (see plans/materialize.py).
+  ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group.  Vertex
+  id ``-1`` is reserved;
+- the gathered frame is cached, and the superstep's gather action reads the
+  1-row sink group back as the dangling-mass scalar (a Python float); the new
+  ranks are the cached gather joined to the vertex frame, with the scalar
+  folded in as a literal.  The previous superstep's gathered frame is
+  released after that action;
+- the rank frame is materialized every superstep, so the plan never grows
+  and the next gather join is exchange-free (see plans/materialize.py):
+  eagerly when ``tol`` is active (the L1 delta join reads every rank frame
+  a second time), through ``checkpoint.save`` (parquet + manifest)
+  when a :class:`CheckpointManager` is given, else by a lazy
+  ``local_materialize`` that executes inside the next superstep's action.
 
 At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
-gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof);
-this module is the semantic reference implementation and the small/medium
-path.
+gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof;
+the shards must carry the sink rows, ``dangling_sink=True``); this module is
+the semantic reference implementation and the small/medium path.
 """
 
 from __future__ import annotations
@@ -68,7 +70,6 @@ def pagerank(
     shards: "AdjShards | None" = None,
     shards_min_edges: int | None = None,
     stats: dict | None = None,
-    one_job_supersteps: bool | None = None,
 ) -> DataFrame:
     """Return ``(id: long, rank: double)``, Σ rank = 1.
 
@@ -78,11 +79,18 @@ def pagerank(
     ``(id, value)`` / ``(id, p)``.  Pass a dict as ``stats`` to receive
     ``{"iterations": k, "delta": last L1 delta}`` — the observability hook
     behind warm-start (incremental recrawl) convergence accounting.
+    ``shards`` must be built with ``dangling_sink=True`` (ValueError
+    otherwise).
     """
     if not (0.0 < damping < 1.0):
         raise ValueError("damping must be in (0, 1)")  # personalized_pagerank.rs:41-45
     if fixed_iters is None and max_iter <= 0:
         raise ValueError("max_iter must be positive")  # personalized_pagerank.rs:46-50
+    if shards is not None and not shards.dangling_sink:
+        raise ValueError(
+            "pagerank needs shards built with dangling_sink=True: the "
+            "dangling mass is read from the sink group of the gather"
+        )
 
     spark = g.vertices.sparkSession
     n = g.num_vertices()
@@ -108,15 +116,8 @@ def pagerank(
             if n_edges < threshold:
                 shards = None
 
-    if shards is not None:
-        # salted CSR adjacency path (plans/shards.py): the join moves one row
-        # per (src, salt) instead of one per edge, and hub scatter is spread
-        # across salt rows — the 100 TB layout.  Shards built with
-        # dangling_sink=True already carry the virtual sink edges.
-        wout = shards.wout.select("src", "w_out")
-        edges_norm = None
-        sink_in_gather = shards.dangling_sink
-    else:
+    edges_norm = None
+    if shards is None:
         sym = g.symmetric_edges()
         wout = sym.groupBy("src").agg(F.sum("weight").alias("w_out"))
         # virtual sink edges: one (u, -1, 1.0) row per dangling vertex, so the
@@ -137,7 +138,6 @@ def pagerank(
             .repartition("src")
             .cache()
         )
-        sink_in_gather = True
 
     # teleport vector p: personalization L1-normalized (uniform fallback when
     # Σ<=0, personalized_pagerank.rs:51-63) else uniform 1/n
@@ -154,18 +154,7 @@ def pagerank(
     base = g.vertices.select("id")
     if personalization is not None:
         base = base.join(personalization, "id", "left")
-    vinfo = (
-        base.join(wout.select(F.col("src").alias("id"), "w_out"), "id", "left")
-        .select(
-            "id",
-            (F.coalesce("w_out", F.lit(0.0)) == 0.0).alias("dangling"),
-            pcol.alias("p"),
-        )
-        .repartition("id")
-        .cache()
-    )
-
-    has_dangling = vinfo.where("dangling").limit(1).count() > 0
+    vinfo = base.select("id", pcol.alias("p")).repartition("id").cache()
 
     start_iter = 0
     ranks = None
@@ -188,23 +177,7 @@ def pagerank(
 
     d = damping
     check_tol = tol is not None and fixed_iters is None
-    # One-job supersteps (the default fixed-iteration shape): the dangling
-    # scalar is pulled to the driver by the SAME action that executes the
-    # gather (a 1-row first() — no separate broadcast-build job), and the
-    # per-superstep checkpoint is LAZY, so it materializes inside the next
-    # superstep's action instead of its own job.  Halves scheduled jobs per
-    # superstep; the arithmetic is bit-identical (the scalar is the same
-    # double either way).  Requires the rank frame to be single-use per
-    # superstep: true on the sink-edge dangling path (and when there are no
-    # dangling vertices), NOT on the semi-join fallback (ranks read twice)
-    # or when a delta/convergence join re-reads ranks.
-    one_job = (
-        checkpoint is None
-        and not check_tol
-        and (not has_dangling or sink_in_gather)
-        if one_job_supersteps is None
-        else one_job_supersteps
-    )
+    lazy = checkpoint is None and not check_tol
     prev_gathered = None
     for it in range(start_iter, n_iters):
         if shards is not None:
@@ -220,93 +193,42 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("c").alias("gather"))
             )
-        gathered_cached = None
-        dang_lit = None
-        if has_dangling and sink_in_gather:
-            # dangling mass came down the same shuffle as every other message:
-            # the sink group is one aggregation row.  gathered is read twice
-            # (sink row + vertex join), so cache it for the step.
-            gathered = gathered.cache()
-            gathered_cached = gathered
-            if one_job:
-                # THE superstep action: runs the gather (and the previous
-                # iteration's deferred checkpoint), fills the cache, and
-                # returns the sink scalar to the driver
-                dang_lit = (
-                    gathered.where(F.col("id") == -1)
-                    .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
-                    .first()[0]
-                )
-                if prev_gathered is not None:
-                    prev_gathered.unpersist()
-            else:
-                dang_df = gathered.where(F.col("id") == -1).agg(
-                    F.coalesce(F.sum("gather"), F.lit(0.0)).alias("dang")
-                )
-        elif has_dangling:
-            # shards built without dangling_sink: per-superstep semi-join
-            # against the dangling-id set (the pre-sink fallback shape)
-            dang_df = (
-                ranks.join(vinfo.where("dangling").select("id"), "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang"))
-            )
-        # the -1 sink row drops out of the left join below (vinfo has no -1)
-        joined = vinfo.join(gathered, "id", "left")
-        if has_dangling and dang_lit is not None:
-            dang_col = F.lit(d) * F.lit(float(dang_lit)) * F.col("p")
-        elif has_dangling:
-            joined = joined.crossJoin(F.broadcast(dang_df))
-            dang_col = F.lit(d) * F.col("dang") * F.col("p")
-        else:
-            dang_col = F.lit(0.0)
-        new_ranks = joined.select(
+        gathered = gathered.cache()
+        # THE superstep action: runs the gather (and a deferred rank
+        # materialization of the previous superstep), fills the cache, and
+        # returns the sink group — the dangling mass — as a float
+        dang = (
+            gathered.where(F.col("id") == -1)
+            .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
+            .first()[0]
+        )
+        if prev_gathered is not None:
+            prev_gathered.unpersist()
+        prev_gathered = gathered
+        # the -1 sink row drops out of the left join (vinfo has no -1)
+        new_ranks = vinfo.join(gathered, "id", "left").select(
             "id",
             (
                 (1.0 - d) * F.col("p")
-                + dang_col
+                + F.lit(d * dang) * F.col("p")
                 + F.lit(d) * F.coalesce("gather", F.lit(0.0))
             ).alias("rank"),
         )
 
-        # Materialize every superstep: eager when the rank frame is
-        # referenced twice next iteration (dangling semi-join or delta
-        # check — a lazy chain would recompute the history ~2^k times);
-        # LAZY on the one-job path, where the next superstep's first()
-        # action materializes it.  Either way lineage truncates and plan
-        # depth stays O(1) across iterations.
         delta = None
+        if check_tol:
+            # eager: the delta join reads this frame, the next gather again
+            new_ranks = _mat(new_ranks)
+            delta = (
+                new_ranks.alias("a")
+                .join(ranks.alias("b"), "id")
+                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
+                .first()[0]
+            )
         if checkpoint is not None:
-            if check_tol:
-                nr = new_ranks.transform(_mat)
-                delta = (
-                    nr.alias("a")
-                    .join(ranks.alias("b"), "id")
-                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                    .first()[0]
-                )
-                new_ranks = checkpoint.save(spark, nr, it, delta=delta)
-                nr.unpersist()
-            else:
-                new_ranks = checkpoint.save(spark, new_ranks, it)
-        else:
-            new_ranks = _mat(new_ranks, eager=not one_job)
-            if check_tol:
-                delta = (
-                    new_ranks.alias("a")
-                    .join(ranks.alias("b"), "id")
-                    .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                    .first()[0]
-                )
-
-        if one_job:
-            # gathered cache is still needed by the deferred checkpoint;
-            # unpersist it when the NEXT superstep's action has run
-            prev_gathered = gathered_cached
-        elif gathered_cached is not None:
-            gathered_cached.unpersist()
-        ranks.unpersist()
-        if it == n_iters - 1 and edges_norm is not None:
-            edges_norm.unpersist()
+            new_ranks = checkpoint.save(spark, new_ranks, it, delta=delta)
+        elif lazy:
+            new_ranks = _mat(new_ranks, eager=False)
         ranks = new_ranks
         if stats is not None:
             stats["iterations"] = it + 1
@@ -314,10 +236,13 @@ def pagerank(
         if delta is not None and delta < tol:
             break
 
-    if one_job and prev_gathered is not None:
-        # force the final deferred checkpoint, then drop the last cache
-        ranks.count()
+    if prev_gathered is not None:
+        if lazy:
+            ranks.count()  # run the last deferred materialization first
         prev_gathered.unpersist()
+    vinfo.unpersist()
+    if edges_norm is not None:
+        edges_norm.unpersist()
     return ranks.select("id", "rank")
 
 

@@ -70,13 +70,14 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     preserved output partitioning.
 
     ``eager=False`` defers the checkpoint's execution to the first action
-    that reads it — in a superstep loop whose NEXT iteration starts with its
-    own small job (e.g. the dangling-mass broadcast build), the deferred
-    checkpoint rides inside that job, cutting scheduled jobs per superstep
-    from two to one.  Correct ONLY when the frame is consumed exactly once
-    before the next checkpoint (a doubly-referenced lazy frame would
-    recompute); the PageRank sink-edge path satisfies this — ranks feed one
-    gather join per superstep.
+    that reads it — in a superstep loop, the next superstep's action (for
+    PageRank, the 1-row read of the dangling-mass sink group), so the
+    materialization needs no job of its own.  Correct ONLY when the frame
+    is consumed exactly once before the next checkpoint (a
+    doubly-referenced lazy frame would recompute) and its inputs stay
+    cached until that action has run; PageRank without ``tol`` satisfies
+    both — ranks feed one gather join per superstep, and the previous
+    gathered frame is released only after the next superstep's action.
 
     AQE is disabled around the checkpoint: physical planning happens inside
     ``localCheckpoint(eager=True)``, and under AQE the leaf comes back as

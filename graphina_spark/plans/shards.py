@@ -48,15 +48,15 @@ class AdjShards:
 
     shards: DataFrame  # (bucket, salt, src, dst_list, w_list, degree, w_out)
     salt_map: DataFrame  # (src, n_salt) — hubs only (n_salt > 1); broadcast side
-    wout: DataFrame  # (src, w_out, degree[, _wlo, _whi]) — scatter-active
-    # vertices; the underscore cols exist only when the builder auto-
-    # detected uniform weights (they rode along on the wout aggregation)
+    wout: DataFrame  # (src, w_out, degree, _wlo, _whi) — scatter-active
+    # vertices; _wlo/_whi are the per-src weight extrema behind the uniform
+    # auto-detect
     salt_cap: int
-    dangling_sink: bool = False  # True: dangling vertices carry one virtual
+    dangling_sink: bool = True  # True: dangling vertices carry one virtual
     # edge to id -1 w=1.0, so Σ dangling rank rides the gather shuffle as the
     # sink's aggregation group (PageRank's dangling mass, no extra rank pass)
     uniform: bool = False  # True: w_list is NOT stored — every edge of a
-    # src carries w_norm = 1/degree (unweighted graphs under normalize=True).
+    # src carries w_norm = 1/degree (auto-detected constant edge weight).
     # Cuts per-superstep adjacency scan traffic to 4 B/edge with compact=True
     # (vs 12 weighted-compact / 16 plain) — the memory-bus term that caps
     # single-box scaling; Common-Crawl link graphs are exactly this shape.
@@ -121,30 +121,22 @@ def build_adj_shards(
     g: LinkGraph,
     salt_cap: int = DEFAULT_SALT_CAP,
     n_buckets: int | None = None,
-    normalize: bool = True,
-    dangling_sink: bool = False,
+    dangling_sink: bool = True,
     compact: bool = False,
-    uniform: bool | None = None,
 ) -> AdjShards:
-    """Group the (symmetrized) edge set into capped, salted CSR rows.
+    """Group the (symmetrized) edge set into capped, salted CSR rows whose
+    w_list holds the PageRank scatter weights w(u,v)/w_out(u).
 
-    ``normalize=True`` stores w_list as w(u,v)/w_out(u) (the PageRank scatter
-    weights); ``False`` stores raw weights (matvec kernels: eigenvector/Katz).
+    ``dangling_sink=True`` (what :func:`pagerank` requires) additionally
+    emits one shard row per dangling vertex (no out-edges): ``(src=u,
+    salt=0, dst_list=[-1], w_list=[1.0])``.  A PageRank gather then produces
+    the total dangling mass as the sink id's aggregation group inside the
+    normal message shuffle.  ``wout`` is NOT given sink rows.
 
-    ``dangling_sink=True`` additionally emits one shard row per dangling
-    vertex (no out-edges): ``(src=u, salt=0, dst_list=[-1], w_list=[1.0])``.
-    A PageRank gather then produces the total dangling mass as the sink id's
-    aggregation group inside the normal message shuffle, replacing the
-    per-superstep second scan of the rank vector.  ``wout`` is NOT given sink
-    rows — dangling vertices keep w_out absent, so vinfo dangling flags stay
-    correct.
-
-    ``uniform`` — True: weights are known constant, store no w_list and
-    gather with 1/degree; False: always store w_list (skips auto-detect
-    entirely — pass this when weights are known non-constant); None
-    (default): auto-detect constant weights via per-src extrema folded
-    into the wout aggregation (no extra edge scan; one tiny reduce over
-    the per-src frame).
+    Constant edge weights are auto-detected from per-src weight extrema
+    folded into the wout aggregation (no extra edge scan; one tiny reduce
+    over the per-src frame): the shards then store no w_list and the gather
+    computes w_norm = 1/degree (``AdjShards.uniform``).
 
     ``compact=True`` stores ``dst_list`` as array<int> and ``w_list`` as
     array<float> — 12 bytes/edge of superstep scan traffic instead of 16 at
@@ -162,36 +154,19 @@ def build_adj_shards(
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     sym = g.symmetric_edges()
-    if uniform and not normalize:
-        raise ValueError(
-            "uniform shards require normalize=True (w_norm = 1/degree)"
-        )
-    detect = uniform is None and normalize
-    wout_aggs = [
+    # per-src weight extrema piggyback on the wout aggregation, so the
+    # constant-weight auto-detect folds into the edge pass that
+    # materializes the wout cache anyway — no extra scan of sym
+    wout = sym.groupBy("src").agg(
         F.sum("weight").alias("w_out"),
         F.count("*").alias("degree"),
-    ]
-    if detect:
-        # per-src weight extrema piggyback on the wout aggregation, so the
-        # constant-weight auto-detect folds into the edge pass that
-        # materializes the wout cache anyway — no extra scan of sym
-        # (callers that know their weights can skip even the small
-        # global reduce below by passing uniform=True/False explicitly)
-        wout_aggs += [
-            F.min("weight").alias("_wlo"),
-            F.max("weight").alias("_whi"),
-        ]
-    wout = sym.groupBy("src").agg(*wout_aggs).cache()
-    if uniform is None:
-        # auto-detect: constant edge weight + normalize => w_norm is
-        # exactly 1/degree, so w_list need not be stored or scanned
-        if detect:
-            mm = wout.agg(
-                F.min("_wlo").alias("lo"), F.max("_whi").alias("hi")
-            ).first()
-            uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
-        else:
-            uniform = False
+        F.min("weight").alias("_wlo"),
+        F.max("weight").alias("_whi"),
+    ).cache()
+    # constant edge weight => w_norm is exactly 1/degree, so w_list need
+    # not be stored or scanned
+    mm = wout.agg(F.min("_wlo").alias("lo"), F.max("_whi").alias("hi")).first()
+    uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
     from pyspark.sql import Window
 
     rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
@@ -201,9 +176,7 @@ def build_adj_shards(
             "src",
             "dst",
             "weight",
-            (
-                (F.col("weight") / F.col("w_out")) if normalize else F.col("weight")
-            ).alias("w_norm"),
+            (F.col("weight") / F.col("w_out")).alias("w_norm"),
             "degree",
             "w_out",
         )
@@ -264,5 +237,5 @@ def build_adj_shards(
         wout=wout,
         salt_cap=salt_cap,
         dangling_sink=dangling_sink,
-        uniform=bool(uniform),
+        uniform=uniform,
     )

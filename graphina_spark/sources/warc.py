@@ -110,9 +110,12 @@ def _parse_blob(blob: bytes) -> Iterator[tuple[str, str, str, bytes]]:
             if ":" in line:
                 k, v = line.split(":", 1)
                 headers[k.strip().lower()] = v.strip()
+        cl = headers.get("content-length", "0")
         try:
-            length = int(headers.get("content-length", "0"))
-        except ValueError:
+            # ASCII digits only: int() also accepts "+5", "1_0" and
+            # non-ASCII digits such as full-width "１０"
+            length = int(cl) if cl.isascii() and cl.isdigit() else -1
+        except ValueError:  # more digits than int() converts
             length = -1
         if length < 0:
             # malformed/crafted Content-Length: skip this header block and

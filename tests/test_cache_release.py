@@ -1,0 +1,53 @@
+"""Every superstep kernel releases what it cached before it returns: the
+session's cache manager is as empty after the call as before it."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from conftest import make_graph
+
+from graphina_spark.operators.components import connected_components
+from graphina_spark.operators.lpa import label_propagation, seeded_label_propagation
+from graphina_spark.operators.pagerank import pagerank
+from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.shards import build_adj_shards
+
+# 3, 4 and 6 are dangling; {5, 6} is a second component
+EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4), (5, 6)]
+
+# kernel name -> call(g, shards, checkpoint, stats)
+KERNELS = {
+    "cc": lambda g, adj, ck, st: connected_components(g),
+    "lpa": lambda g, adj, ck, st: label_propagation(g, max_iter=5),
+    "seeded_lpa": lambda g, adj, ck, st: seeded_label_propagation(
+        g, g.vertices.where(F.col("id") < 2).withColumn("label", F.col("id")),
+        fixed_iters=2),
+    "pagerank_plain": lambda g, adj, ck, st: pagerank(g, fixed_iters=3, tol=None),
+    "pagerank_shards": lambda g, adj, ck, st: pagerank(
+        g, fixed_iters=3, tol=None, shards=adj, shards_min_edges=0),
+    "pagerank_checkpoint": lambda g, adj, ck, st: pagerank(
+        g, fixed_iters=3, tol=None, checkpoint=ck),
+    "pagerank_tol_early_exit": lambda g, adj, ck, st: pagerank(
+        g, tol=1e-2, max_iter=100, stats=st),
+}
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("kernel", list(KERNELS))
+def test_kernel_leaves_cache_manager_empty(spark, tmp_path, kernel):
+    g = make_graph(spark, EDGES, n=7, directed=True)
+    spark.catalog.clearCache()
+    adj = build_adj_shards(g, salt_cap=2) if kernel == "pagerank_shards" else None
+    ck = CheckpointManager(str(tmp_path), "leak", {})
+    stats: dict = {}
+    out = KERNELS[kernel](g, adj, ck, stats)
+    if adj is not None:
+        adj.unpersist()  # the caller's shards, not the kernel's cache
+    assert _cache_empty(spark)
+    if kernel == "pagerank_tol_early_exit":
+        assert stats["iterations"] < 100
+    # the result is still readable after the kernel's caches are gone
+    assert out.count() == 7

@@ -180,6 +180,25 @@ def test_png_zlib_bomb_bounded():
         decode_png(blob)
 
 
+def test_png_idat_without_checksum_rejected():
+    # the IDAT inflates to exactly the 2x2 gray scanlines, but the zlib
+    # stream stops before its Adler-32 trailer: never checksummed
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
+
+    def png(idat):
+        return (
+            b"\x89PNG\r\n\x1a\n"
+            + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr + b"\x00" * 4
+            + struct.pack(">I", len(idat)) + b"IDAT" + idat + b"\x00" * 4
+            + struct.pack(">I", 0) + b"IEND" + b"\x00" * 4
+        )
+
+    idat = zlib.compress(b"\x00\x01\x02" * 2)
+    assert decode_png(png(idat)).tolist() == [[[1], [2]], [[1], [2]]]
+    with pytest.raises(ValueError, match="size mismatch"):
+        decode_png(png(idat[:-4]))
+
+
 def test_jpeg_dimension_bomb_rejected():
     # take a valid jpeg and rewrite the SOF0 dims to 65535x65535
     blob = bytearray(STREAMS["jpeg"])

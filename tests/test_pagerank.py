@@ -108,3 +108,43 @@ def test_random_corpus(spark, seed, n, density, directed):
     exp = ref_pagerank(n, edges, weights, directed=directed, fixed_iters=25)
     assert_close(got, exp, eps=1e-9)
     assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+# one graph with dangling vertices (3, 4; unit weights, so the shards take
+# the uniform 1/degree gather) and one without (weighted w_list gather)
+SUPERSTEP_GRAPHS = {
+    "dangling": ([(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], None),
+    "no_dangling": (
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (4, 0), (0, 4)],
+        [1.0, 2.0, 3.0, 1.0, 4.0, 2.0, 5.0],
+    ),
+}
+
+
+@pytest.mark.parametrize("stop", ["fixed_iters", "tol"])
+@pytest.mark.parametrize("ckpt", [False, True], ids=["no_ckpt", "ckpt"])
+@pytest.mark.parametrize("path", ["plain", "shards"])
+@pytest.mark.parametrize("graph", sorted(SUPERSTEP_GRAPHS))
+def test_superstep_matches_reference(spark, tmp_path, graph, path, ckpt, stop):
+    from graphina_spark.plans.checkpoint import CheckpointManager
+    from graphina_spark.plans.shards import build_adj_shards
+
+    edges, weights = SUPERSTEP_GRAPHS[graph]
+    g = make_graph(spark, edges, n=5, directed=True, weights=weights)
+    # damping 0.3 keeps the tol runs short (8-10 supersteps to 1e-6)
+    kw = {"damping": 0.3}
+    kw.update({"fixed_iters": 6, "tol": None} if stop == "fixed_iters"
+              else {"tol": 1e-6, "max_iter": 200})
+    exp = ref_pagerank(5, edges, weights, **kw)
+    adj = build_adj_shards(g, salt_cap=2) if path == "shards" else None
+    if adj is not None:
+        kw.update(shards=adj, shards_min_edges=0)
+    if ckpt:
+        kw["checkpoint"] = CheckpointManager(str(tmp_path), "pr", {"d": 0.3})
+    stats: dict = {}
+    got = ranks_dict(pagerank(g, stats=stats, **kw))
+    assert_close(got, exp, eps=1e-9)
+    if stop == "tol":
+        assert 1 < stats["iterations"] < 200 and stats["delta"] < 1e-6
+    if adj is not None:
+        adj.unpersist()

@@ -94,26 +94,32 @@ def test_convergence_with_shards(spark, sf_dir):
     adj.unpersist()
 
 
-def test_dangling_sink_shards_match_plain_and_semi_join(spark):
+def test_dangling_sink_shards_match_plain(spark):
     # 3 and 4 are dangling (no out-edges); 2→3, 0→4 feed them rank mass
     g = make_graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], n=5)
     plain = _pr_map(pagerank(g, fixed_iters=10, tol=None))
-    sink = build_adj_shards(g, salt_cap=2, dangling_sink=True)
-    nosink = build_adj_shards(g, salt_cap=2, dangling_sink=False)
+    sink = build_adj_shards(g, salt_cap=2)
+    assert sink.dangling_sink
     pr_sink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=sink, shards_min_edges=0))
-    pr_nosink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=nosink, shards_min_edges=0))
     # sink id -1 never leaks into results
     assert set(pr_sink) == set(plain) and -1 not in pr_sink
     assert all(abs(plain[k] - pr_sink[k]) < 1e-12 for k in plain)
-    assert all(abs(plain[k] - pr_nosink[k]) < 1e-12 for k in plain)
     assert abs(sum(pr_sink.values()) - 1.0) < 1e-9
     # sink shard rows exist exactly for the dangling vertices
     sink_rows = sink.shards.where(F.col("w_out") == 0.0).collect()
     assert {r["src"] for r in sink_rows} == {3, 4}
     assert all(list(r["dst_list"]) == [-1] for r in sink_rows)
-    # wout carries no sink rows (vinfo dangling flags derive from absence)
+    # wout carries no sink rows
     assert sink.wout.where(F.col("src").isin(3, 4)).count() == 0
     sink.unpersist()
+
+
+def test_pagerank_rejects_shards_without_sink(spark):
+    g = make_graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], n=5)
+    nosink = build_adj_shards(g, salt_cap=2, dangling_sink=False)
+    assert nosink.shards.where(F.col("w_out") == 0.0).count() == 0
+    with pytest.raises(ValueError, match="dangling_sink=True"):
+        pagerank(g, fixed_iters=10, tol=None, shards=nosink, shards_min_edges=0)
     nosink.unpersist()
 
 
@@ -181,9 +187,3 @@ def test_uniform_shards_not_detected_on_weighted(spark, sf_dir):
     adj = build_adj_shards(g, dangling_sink=True)
     assert adj.uniform is False and "w_list" in adj.shards.columns
     adj.unpersist()
-
-
-def test_uniform_requires_normalize(spark):
-    g = make_graph(spark, [(0, 1)], n=2, directed=True)
-    with pytest.raises(ValueError, match="normalize"):
-        build_adj_shards(g, normalize=False, uniform=True)

@@ -52,6 +52,22 @@ def test_non_numeric_content_length_skipped():
     assert [(r[1], r[3]) for r in recs] == [("doc://2", b"ok")]
 
 
+@settings(max_examples=100, deadline=None)
+@given(length=st.one_of(
+    st.sampled_from(["+5", "1_0", "\uff15", "\uff11\uff10", "\u0665"]),
+    st.integers(0, 99).map(lambda k: f"+{k}"),
+    st.integers(10, 99).map(lambda k: f"{k // 10}_{k % 10}"),
+    st.text(st.characters(categories=["Nd"]), min_size=1, max_size=3)
+    .filter(lambda t: not t.isascii()),
+))
+def test_non_ascii_digit_content_length_skipped(length):
+    # int() accepts every one of these; only ASCII ^[0-9]+$ is a length, so
+    # the record is skipped and the rescan recovers the next one
+    blob = _record("doc://evil", b"xxxxx", length=length) + _record("doc://2", b"ok")
+    recs = list(_parse_blob(blob))
+    assert [(r[1], r[3]) for r in recs] == [("doc://2", b"ok")]
+
+
 def test_non_utf8_header_bytes_do_not_raise():
     blob = _record("doc://caf\xe9".encode("latin-1").decode("latin-1"), b"ok")
     # splice raw latin-1 bytes into the URI header line
