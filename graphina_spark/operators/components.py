@@ -16,8 +16,8 @@ Finding Connected Components in MapReduce):
 The neighbor exchange is one join + min-aggregation per superstep (map-side
 partial agg combines messages before the shuffle); the compression join makes
 label trees collapse so rounds ≈ O(log diameter) instead of O(diameter).
-Every superstep materializes (localCheckpoint / parquet checkpoint) to keep
-lineage flat; convergence = zero changed labels (a single scalar agg).
+The shared loop (:mod:`graphina_spark.plans.superstep`) runs the supersteps
+and stops at zero changed labels.
 """
 
 from __future__ import annotations
@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
-from graphina_spark.plans.materialize import local_materialize as _mat
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.superstep import changed_count, run_supersteps
 
 
 def connected_components(
@@ -35,7 +35,6 @@ def connected_components(
     max_iter: int = 100,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
-    compress: bool = True,
 ) -> DataFrame:
     """(id: long, component: long) — component = min vertex id in the
     component (the canonical relabel both sides of the oracle apply).
@@ -43,26 +42,9 @@ def connected_components(
     Works for undirected graphs and as **weakly** connected components for
     directed graphs (edges followed both ways, connected_components.rs:83-117).
     """
-    spark = g.vertices.sparkSession
-    sym = (
-        g.undirected_view()
-        .select("src", "dst")
-        .repartition("src")
-        .cache()
-    )
+    sym = g.undirected_view().select("src", "dst").repartition("src").cache()
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None and resume:
-        found = checkpoint.latest(spark)
-        if found is not None:
-            it0, labels, _ = found
-            start_iter = it0 + 1
-    if labels is None:
-        labels = g.vertices.select("id", F.col("id").alias("component"))
-    labels = labels.transform(_mat)
-
-    for it in range(start_iter, max_iter):
+    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         nbr_min = (
             labels.alias("l")
             .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
@@ -73,33 +55,26 @@ def connected_components(
             labels.join(nbr_min, "id", "left")
             .select("id", F.least("component", F.coalesce("nbr", "component")).alias("component"))
         )
-        if compress:
-            # pointer jump: follow my label's current label
-            new = (
-                new.alias("a")
-                .join(
-                    new.select(
-                        F.col("id").alias("component"), F.col("component").alias("cc")
-                    ).alias("b"),
-                    "component",
-                    "left",
-                )
-                .select(F.col("a.id").alias("id"), F.coalesce("cc", "component").alias("component"))
+        # pointer jump: follow my label's current label
+        new = (
+            new.alias("a")
+            .join(
+                new.select(
+                    F.col("id").alias("component"), F.col("component").alias("cc")
+                ).alias("b"),
+                "component",
+                "left",
             )
-        new = new.transform(_mat)
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
+            .select(F.col("a.id").alias("id"), F.coalesce("cc", "component").alias("component"))
         )
-        if checkpoint is not None:
-            new = checkpoint.save(spark, new, it, extra={"changed": changed})
-        labels = new
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+        return new, []
+
+    return run_supersteps(
+        g.vertices.sparkSession, "cc",
+        lambda: g.vertices.select("id", F.col("id").alias("component")),
+        step, max_iter, score=changed_count("component"), tol=1,
+        checkpoint=checkpoint, resume=resume, release=[sym],
+    )
 
 
 def weakly_connected_components(g: LinkGraph, **kw) -> DataFrame:

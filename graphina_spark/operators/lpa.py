@@ -28,17 +28,22 @@ per invocation and hold for every round (labels are always vertex
 ids); past the 63-bit split the helper degrades to the struct-max
 aggregate (still map-side combining), never the window.  See
 BENCH/BASELINE.md §LPA for the kernel-level scaling triple.
+
+The shared loop (:mod:`graphina_spark.plans.superstep`) runs the supersteps
+of both kernels; unseeded LPA without ``fixed_iters`` stops at zero changes.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.argmax import argmax_long
-from graphina_spark.plans.materialize import local_materialize as _mat
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.superstep import changed_count, run_supersteps
 
 
 def _argmax_bounds(sym: DataFrame, label_frame: DataFrame,
@@ -60,6 +65,18 @@ def _argmax_bounds(sym: DataFrame, label_frame: DataFrame,
     return {"max_score": int(max_deg), "max_tie": int(hi or 0)}
 
 
+def _neighbor_vote(labels: DataFrame, sym: DataFrame, am_kw: dict) -> DataFrame:
+    """(id, new_label): the most frequent label among each vertex's
+    neighbors in ``labels``, ties broken (count desc, label asc)."""
+    freq = (
+        labels.alias("l")
+        .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
+        .groupBy(F.col("e.dst").alias("id"), F.col("l.label"))
+        .agg(F.count("*").alias("cnt"))
+    )
+    return argmax_long(freq, "id", "cnt", "label", out_tie="new_label", **am_kw)
+
+
 def label_propagation(
     g: LinkGraph,
     max_iter: int = 20,
@@ -71,56 +88,27 @@ def label_propagation(
     matching the reference (label_propagation.rs:44-51)."""
     if fixed_iters is None and max_iter <= 0:
         raise ValueError("max_iter must be positive")
-    spark = g.vertices.sparkSession
     if g.vertices.isEmpty():
         raise ValueError("label propagation on empty graph")
 
     sym = g.undirected_view().select("src", "dst").repartition("src").cache()
-    n_iters = fixed_iters if fixed_iters is not None else max_iter
+    # computed inside the first superstep, so a raise there still releases sym
+    am_kw = functools.cache(lambda: _argmax_bounds(sym, g.vertices, "id"))
 
-    start_iter = 0
-    labels = None
-    if checkpoint is not None and resume:
-        found = checkpoint.latest(spark)
-        if found is not None:
-            it0, labels, _ = found
-            start_iter = it0 + 1
-    if labels is None:
-        labels = g.vertices.select("id", F.col("id").alias("label"))
-    labels = labels.transform(_mat)
-    am_kw = _argmax_bounds(sym, g.vertices, "id")
+    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+        best = _neighbor_vote(labels, sym, am_kw())
+        new = labels.join(best, "id", "left").select(
+            "id", F.coalesce("new_label", "label").alias("label")
+        )
+        return new, []
 
-    for it in range(start_iter, n_iters):
-        freq = (
-            labels.alias("l")
-            .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
-            .groupBy(F.col("e.dst").alias("id"), F.col("l.label"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        best = argmax_long(
-            freq, "id", "cnt", "label", out_tie="new_label", **am_kw
-        )
-        new = (
-            labels.join(best, "id", "left")
-            .select("id", F.coalesce("new_label", "label").alias("label"))
-            .transform(_mat)
-        )
-        if fixed_iters is None:
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-        else:
-            changed = None
-        if checkpoint is not None:
-            new = checkpoint.save(spark, new, it, extra={"changed": changed})
-        labels = new
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+    return run_supersteps(
+        g.vertices.sparkSession, "lpa",
+        lambda: g.vertices.select("id", F.col("id").alias("label")),
+        step, fixed_iters if fixed_iters is not None else max_iter,
+        score=changed_count("label") if fixed_iters is None else None, tol=1,
+        checkpoint=checkpoint, resume=resume, release=[sym],
+    )
 
 
 def seeded_label_propagation(
@@ -151,34 +139,28 @@ def seeded_label_propagation(
         raise ValueError("fixed_iters must be positive")
     sym = g.undirected_view().select("src", "dst").repartition("src").cache()
     seed = seeds.select("id", F.col("label").cast("long").alias("_seed"))
-    labels = (
-        g.vertices.select("id")
-        .join(seed, "id", "left")
-        .select("id", F.col("_seed").alias("label"))
-        .transform(_mat)
-    )
-    am_kw = _argmax_bounds(
+    am_kw = functools.cache(lambda: _argmax_bounds(
         sym, seed.where(F.col("_seed").isNotNull()), "_seed"
-    )
-    for _ in range(fixed_iters):
-        freq = (
-            labels.where(F.col("label").isNotNull())
-            .alias("l")
-            .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
-            .groupBy(F.col("e.dst").alias("id"), F.col("l.label"))
-            .agg(F.count("*").alias("cnt"))
+    ))
+
+    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+        best = _neighbor_vote(
+            labels.where(F.col("label").isNotNull()), sym, am_kw()
         )
-        best = argmax_long(
-            freq, "id", "cnt", "label", out_tie="new_label", **am_kw
-        )
-        labels = (
+        new = (
             labels.join(seed, "id", "left")
             .join(best, "id", "left")
             .select(
                 "id",
                 F.coalesce("_seed", "new_label", "label").alias("label"),
             )
-            .transform(_mat)
         )
-    sym.unpersist()
-    return labels
+        return new, []
+
+    return run_supersteps(
+        g.vertices.sparkSession, "seeded_lpa",
+        lambda: g.vertices.select("id")
+        .join(seed, "id", "left")
+        .select("id", F.col("_seed").alias("label")),
+        step, fixed_iters, release=[sym],
+    )

@@ -27,14 +27,10 @@ Spark execution model — one superstep shape:
 - the gathered frame is cached, and the superstep's gather action reads the
   1-row sink group back as the dangling-mass scalar (a Python float); the new
   ranks are the cached gather joined to the vertex frame, with the scalar
-  folded in as a literal.  The previous superstep's gathered frame is
-  released after that action;
-- the rank frame is materialized every superstep, so the plan never grows
-  and the next gather join is exchange-free (see plans/materialize.py):
-  eagerly when ``tol`` is active (the L1 delta join reads every rank frame
-  a second time), through ``checkpoint.save`` (parquet + manifest)
-  when a :class:`CheckpointManager` is given, else by a lazy
-  ``local_materialize`` that executes inside the next superstep's action.
+  folded in as a literal;
+- the shared loop (:mod:`graphina_spark.plans.superstep`) runs the
+  supersteps; the ranks are its ``read_once`` state (one gather join reads
+  them per superstep), and ``tol`` its stop on the L1 delta.
 
 At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
 gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof;
@@ -48,8 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
-from graphina_spark.plans.materialize import local_materialize as _mat
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.superstep import run_supersteps
 
 # Symmetrized-edge count below which pagerank(shards=...) falls back to the
 # plain per-edge join (measured crossover region: shards lose at 57k edges,
@@ -116,7 +112,23 @@ def pagerank(
             if n_edges < threshold:
                 shards = None
 
-    edges_norm = None
+    # teleport vector p: personalization L1-normalized (uniform fallback when
+    # Σ<=0, personalized_pagerank.rs:51-63) else uniform 1/n
+    pcol = F.lit(1.0 / n)
+    if personalization is not None:
+        psum = personalization.agg(F.sum("p")).first()[0] or 0.0
+        if psum > 0:
+            pcol = F.coalesce(F.col("p") / F.lit(psum), F.lit(0.0))
+        else:
+            personalization = None
+
+    # no Spark action between the caches below and run_supersteps, whose
+    # finally releases them
+    base = g.vertices.select("id")
+    if personalization is not None:
+        base = base.join(personalization, "id", "left")
+    vinfo = base.select("id", pcol.alias("p")).repartition("id").cache()
+    release = [vinfo]
     if shards is None:
         sym = g.symmetric_edges()
         wout = sym.groupBy("src").agg(F.sum("weight").alias("w_out"))
@@ -138,48 +150,19 @@ def pagerank(
             .repartition("src")
             .cache()
         )
+        release.append(edges_norm)
 
-    # teleport vector p: personalization L1-normalized (uniform fallback when
-    # Σ<=0, personalized_pagerank.rs:51-63) else uniform 1/n
-    if personalization is not None:
-        psum = personalization.agg(F.sum("p")).first()[0] or 0.0
-        if psum <= 0:
-            pcol = F.lit(1.0 / n)
-            personalization = None
-        else:
-            pcol = F.coalesce(F.col("p") / F.lit(psum), F.lit(0.0))
-    else:
-        pcol = F.lit(1.0 / n)
+    def init() -> DataFrame:
+        if nstart is None:
+            return g.vertices.select("id", F.lit(1.0 / n).alias("rank"))
+        ssum = nstart.agg(F.sum("value")).first()[0] or 0.0
+        if ssum == 0:
+            raise ValueError("nstart sums to zero")  # pagerank.rs:76-80
+        return g.vertices.select("id").join(nstart, "id", "left").select(
+            "id", (F.coalesce("value", F.lit(0.0)) / F.lit(ssum)).alias("rank")
+        )
 
-    base = g.vertices.select("id")
-    if personalization is not None:
-        base = base.join(personalization, "id", "left")
-    vinfo = base.select("id", pcol.alias("p")).repartition("id").cache()
-
-    start_iter = 0
-    ranks = None
-    if checkpoint is not None and resume:
-        found = checkpoint.latest(spark)
-        if found is not None:
-            start_iter, ranks, _ = found
-            start_iter += 1
-    if ranks is None:
-        if nstart is not None:
-            ssum = nstart.agg(F.sum("value")).first()[0] or 0.0
-            if ssum == 0:
-                raise ValueError("nstart sums to zero")  # pagerank.rs:76-80
-            ranks = g.vertices.select("id").join(nstart, "id", "left").select(
-                "id", (F.coalesce("value", F.lit(0.0)) / F.lit(ssum)).alias("rank")
-            )
-        else:
-            ranks = g.vertices.select("id", F.lit(1.0 / n).alias("rank"))
-    ranks = ranks.transform(_mat)
-
-    d = damping
-    check_tol = tol is not None and fixed_iters is None
-    lazy = checkpoint is None and not check_tol
-    prev_gathered = None
-    for it in range(start_iter, n_iters):
+    def step(ranks: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         if shards is not None:
             gathered = shards.gather(ranks, value="rank")
         else:
@@ -202,47 +185,32 @@ def pagerank(
             .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
             .first()[0]
         )
-        if prev_gathered is not None:
-            prev_gathered.unpersist()
-        prev_gathered = gathered
         # the -1 sink row drops out of the left join (vinfo has no -1)
         new_ranks = vinfo.join(gathered, "id", "left").select(
             "id",
             (
-                (1.0 - d) * F.col("p")
-                + F.lit(d * dang) * F.col("p")
-                + F.lit(d) * F.coalesce("gather", F.lit(0.0))
+                (1.0 - damping) * F.col("p")
+                + F.lit(damping * dang) * F.col("p")
+                + F.lit(damping) * F.coalesce("gather", F.lit(0.0))
             ).alias("rank"),
         )
+        return new_ranks, [gathered]
 
-        delta = None
-        if check_tol:
-            # eager: the delta join reads this frame, the next gather again
-            new_ranks = _mat(new_ranks)
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "id")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
-                .first()[0]
-            )
-        if checkpoint is not None:
-            new_ranks = checkpoint.save(spark, new_ranks, it, delta=delta)
-        elif lazy:
-            new_ranks = _mat(new_ranks, eager=False)
-        ranks = new_ranks
-        if stats is not None:
-            stats["iterations"] = it + 1
-            stats["delta"] = delta
-        if delta is not None and delta < tol:
-            break
+    def l1_delta(new: DataFrame, old: DataFrame) -> float:
+        return (
+            new.alias("a")
+            .join(old.alias("b"), "id")
+            .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
+            .first()[0]
+        )
 
-    if prev_gathered is not None:
-        if lazy:
-            ranks.count()  # run the last deferred materialization first
-        prev_gathered.unpersist()
-    vinfo.unpersist()
-    if edges_norm is not None:
-        edges_norm.unpersist()
+    ranks = run_supersteps(
+        spark, "pagerank", init, step, n_iters,
+        score=l1_delta if tol is not None and fixed_iters is None else None,
+        tol=tol or 0.0,
+        checkpoint=checkpoint, resume=resume, stats=stats,
+        release=release, read_once=True,
+    )
     return ranks.select("id", "rank")
 
 

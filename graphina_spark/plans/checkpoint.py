@@ -29,6 +29,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -73,12 +74,7 @@ class CheckpointManager:
         for fn in sorted(os.listdir(path)):
             if fn.endswith(".parquet"):
                 fp = os.path.join(path, fn)
-                try:
-                    import pyarrow.parquet as pq
-
-                    rows = pq.ParquetFile(fp).metadata.num_rows
-                except Exception:
-                    rows = -1
+                rows = pq.ParquetFile(fp).metadata.num_rows
                 parts.append(
                     {"file": fn, "rows": rows, "bytes": os.path.getsize(fp)}
                 )

@@ -26,8 +26,8 @@ longer auto-broadcast — the right default for web-scale supersteps (a rank
 vector never broadcasts at 10^12 vertices; sessions from
 ``graphina_spark.session.get_spark`` prefer shuffled-hash joins instead).
 
-Falls back to a stats-free, partitioning-free re-wrap (round-1 behavior),
-then to the plain checkpoint, if the JVM-internal constructors drift.
+The re-wrap calls JVM-internal constructors of the pinned Spark: if they
+drift it raises, never silently dropping the stats fix or the partitioning.
 """
 
 from __future__ import annotations
@@ -35,14 +35,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _rewrap_keep_partitioning(ck: DataFrame) -> DataFrame:
-    """Rebuild ``ck``'s LogicalRDD leaf minus originStats/originConstraints.
+def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` with flat lineage, non-inherited stats, and
+    preserved output partitioning.
 
-    Constructor (Spark 4.x): LogicalRDD(output, rdd, outputPartitioning,
-    outputOrdering, isStreaming, stream: Option)(session, originStats:
-    Option, originConstraints: Option) — curried lists flatten in bytecode.
+    ``eager=False`` defers the checkpoint's execution to the first action
+    that reads it, so the materialization needs no job of its own.  Correct
+    ONLY when the frame is consumed exactly once before the next checkpoint
+    (a doubly-referenced lazy frame would recompute) and its inputs stay
+    cached until that action has run — plans/superstep.py decides when
+    that holds.
+
+    AQE is disabled around the checkpoint: physical planning happens inside
+    ``localCheckpoint(eager=True)``, and under AQE the leaf comes back as
+    ``UnknownPartitioning`` (an ``AdaptiveSparkPlanExec``'s final
+    partitioning is invisible to ``LogicalRDD.fromDataset``; a coalesced
+    shuffle genuinely is not a hash partitioning, so it could not be claimed
+    anyway).  Superstep shapes are static and pre-partitioned — the two
+    things AQE exists to fix at runtime are already fixed at design time —
+    and its per-stage re-planning costs ~0.5 s/superstep of driver latency
+    at local[32] (measured, PLANS.md).  Ad-hoc queries outside the
+    superstep kernels keep the session's AQE setting.
     """
-    spark = ck.sparkSession
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        ck = df.localCheckpoint(eager=eager)
+    finally:
+        spark.conf.set(key, prev)
+    # rebuild the LogicalRDD leaf minus originStats/originConstraints.
+    # Constructor (Spark 4.x): LogicalRDD(output, rdd, outputPartitioning,
+    # outputOrdering, isStreaming, stream: Option)(session, originStats:
+    # Option, originConstraints: Option) — curried lists flatten in bytecode.
     jvm = spark.sparkContext._jvm
     leaf = ck._jdf.queryExecution().analyzed()
     if leaf.getClass().getName() != "org.apache.spark.sql.execution.LogicalRDD":
@@ -63,53 +89,3 @@ def _rewrap_keep_partitioning(ck: DataFrame) -> DataFrame:
         spark._jsparkSession, fresh_leaf
     )
     return DataFrame(jdf, spark)
-
-
-def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Materialize ``df`` with flat lineage, non-inherited stats, and
-    preserved output partitioning.
-
-    ``eager=False`` defers the checkpoint's execution to the first action
-    that reads it — in a superstep loop, the next superstep's action (for
-    PageRank, the 1-row read of the dangling-mass sink group), so the
-    materialization needs no job of its own.  Correct ONLY when the frame
-    is consumed exactly once before the next checkpoint (a
-    doubly-referenced lazy frame would recompute) and its inputs stay
-    cached until that action has run; PageRank without ``tol`` satisfies
-    both — ranks feed one gather join per superstep, and the previous
-    gathered frame is released only after the next superstep's action.
-
-    AQE is disabled around the checkpoint: physical planning happens inside
-    ``localCheckpoint(eager=True)``, and under AQE the leaf comes back as
-    ``UnknownPartitioning`` (an ``AdaptiveSparkPlanExec``'s final
-    partitioning is invisible to ``LogicalRDD.fromDataset``; a coalesced
-    shuffle genuinely is not a hash partitioning, so it could not be claimed
-    anyway).  Superstep shapes are static and pre-partitioned — the two
-    things AQE exists to fix at runtime are already fixed at design time —
-    and its per-stage re-planning costs ~0.5 s/superstep of driver latency
-    at local[32] (measured, PLANS.md).  Ad-hoc queries outside the
-    superstep kernels keep the session's AQE setting.
-    """
-    spark = df.sparkSession
-    _key = "spark.sql.adaptive.enabled"
-    try:
-        _prev = spark.conf.get(_key)
-    except Exception:  # pragma: no cover
-        _prev = "true"
-    spark.conf.set(_key, "false")
-    try:
-        ck = df.localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set(_key, _prev)
-    try:
-        return _rewrap_keep_partitioning(ck)
-    except Exception:  # pragma: no cover - Spark-internal API drift
-        pass
-    try:
-        jdf = ck._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        jspark = df.sparkSession._jsparkSession
-        fresh = jspark.internalCreateDataFrame(jrdd, jdf.schema(), False)
-        return DataFrame(fresh, df.sparkSession)
-    except Exception:  # pragma: no cover
-        return ck

@@ -63,10 +63,7 @@ class AdjShards:
 
     def unpersist(self) -> None:
         for df in (self.shards, self.salt_map, self.wout):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            df.unpersist()
 
     def gather(self, ranks: DataFrame, value: str = "rank") -> DataFrame:
         """One superstep's message wave: Σ_{u→v} value[u]·w_norm(u,v) → (id,

@@ -24,6 +24,9 @@ def get_spark(
     - Arrow on (all html/text UDFs are vectorized pandas UDFs)
     - UTC timezone (oracle comparisons against DuckDB's UTC-naive timestamps)
     - shuffle partitions sized to cores, not the 200 default
+    - driver heap ``SPARK_GRAFT_DRIVER_MEM``, else half of physical RAM up
+      to 16g: local mode runs every task in the driver JVM, and a heap near
+      RAM lets it grow until the OS kills it
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -32,6 +35,7 @@ def get_spark(
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         shuffle_partitions = cpus if n in ("*", "") else int(n)
 
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -48,7 +52,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(ram_mb // 2, 16384)}m")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -2,6 +2,7 @@
 session's cache manager is as empty after the call as before it."""
 
 import pytest
+from pyspark.errors import NumberFormatException
 from pyspark.sql import functions as F
 
 from conftest import make_graph
@@ -51,3 +52,26 @@ def test_kernel_leaves_cache_manager_empty(spark, tmp_path, kernel):
         assert stats["iterations"] < 100
     # the result is still readable after the kernel's caches are gone
     assert out.count() == 7
+
+
+# kernel name -> (call(g) that raises after the kernel cached its frames,
+# the exception it raises)
+RAISING = {
+    # nstart is validated after vinfo/edges_norm are cached
+    "pagerank_nstart_zero": (lambda g: pagerank(
+        g, nstart=g.vertices.select("id", F.lit(0.0).alias("value"))), ValueError),
+    # a non-numeric seed label fails its cast after sym is cached
+    "seeded_lpa_bad_seed": (lambda g: seeded_label_propagation(
+        g, g.vertices.where(F.col("id") < 2).withColumn("label", F.lit("x")),
+        fixed_iters=2), NumberFormatException),
+}
+
+
+@pytest.mark.parametrize("kernel", list(RAISING))
+def test_raising_kernel_leaves_cache_manager_empty(spark, kernel):
+    g = make_graph(spark, EDGES, n=7, directed=True)
+    spark.catalog.clearCache()
+    call, exc = RAISING[kernel]
+    with pytest.raises(exc):
+        call(g)
+    assert _cache_empty(spark)

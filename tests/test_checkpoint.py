@@ -7,6 +7,10 @@ import os
 
 import pytest
 
+from conftest import make_graph
+
+from graphina_spark.operators.components import connected_components
+from graphina_spark.operators.lpa import label_propagation
 from graphina_spark.operators.pagerank import pagerank
 from graphina_spark.plans.checkpoint import CheckpointManager
 from graphina_spark.sources.derived import web_graph
@@ -74,3 +78,57 @@ def test_convergence_deltas_recorded(spark, sf_dir, tmp_path):
     assert all(d is not None for d in deltas)
     assert deltas[-1] < 1e-3  # run stopped because tolerance was hit
     assert deltas == sorted(deltas, reverse=True)  # monotone decreasing here
+
+
+def _clique(nodes):
+    return [(a, b) for i, a in enumerate(nodes) for b in nodes[i + 1:]]
+
+
+# a 40-vertex path takes cc several pointer-jumping supersteps; a chain of
+# 5-cliques keeps label propagation moving for a few supersteps
+PATH40 = [(i, i + 1) for i in range(39)]
+CLIQUE_CHAIN = [e for c in range(6) for e in _clique(range(5 * c, 5 * c + 5))] + [
+    (5 * c + 4, 5 * c + 5) for c in range(5)
+]
+
+# kernel -> (graph edges, call(g, **checkpoint_kw), label column)
+RESUMABLE = {
+    "cc": (PATH40, lambda g, **kw: connected_components(g, **kw), "component"),
+    "lpa_converging": (
+        CLIQUE_CHAIN, lambda g, **kw: label_propagation(g, max_iter=20, **kw), "label"),
+    "lpa_fixed": (
+        CLIQUE_CHAIN, lambda g, **kw: label_propagation(g, fixed_iters=6, **kw), "label"),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(RESUMABLE))
+def test_label_kernel_resume_reruns_only_tail(spark, tmp_path, kernel):
+    """Interrupt after k supersteps (no manifest from iteration k on), resume:
+    same labels as the uninterrupted run, and only supersteps k.. rerun."""
+    edges, run, col = RESUMABLE[kernel]
+    n = 1 + max(max(e) for e in edges)
+    g = make_graph(spark, edges, n=n, directed=False)
+
+    def labels(df):
+        return {r["id"]: r[col] for r in df.collect()}
+
+    full = labels(run(g))
+    ck = CheckpointManager(base=str(tmp_path), run_id=kernel, params={"k": kernel})
+    assert labels(run(g, checkpoint=ck)) == full
+    pattern = os.path.join(ck.run_dir, "manifest-*.json")
+    manifests = sorted(glob.glob(pattern))
+    assert len(manifests) >= 3
+    k = len(manifests) // 2
+    for path in manifests[k:]:
+        os.remove(path)
+    head = {p: os.stat(p).st_mtime_ns for p in manifests[:k]}
+
+    assert labels(run(g, checkpoint=ck, resume=True)) == full
+    after = sorted(glob.glob(pattern))
+    assert after == manifests  # the tail supersteps ran again, no more
+    assert {p: os.stat(p).st_mtime_ns for p in after[:k]} == head
+    last = json.load(open(after[-1]))
+    if kernel == "lpa_fixed":
+        assert last["delta"] is None
+    else:
+        assert last["delta"] == 0  # the changed-label count that stopped it

@@ -41,12 +41,11 @@ def test_long_path_converges(spark):
     assert set(got.values()) == {0}
 
 
-def test_no_compress_matches(spark):
+def test_path_pair_and_isolated(spark):
     edges = [(0, 1), (1, 2), (4, 5)]
     g = make_graph(spark, edges, n=6, directed=False)
-    a = labels_dict(connected_components(g, compress=False))
-    b = labels_dict(connected_components(g, compress=True))
-    assert a == b == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
+    got = labels_dict(connected_components(g))
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
 
 
 def test_count_components(spark):

@@ -49,3 +49,22 @@ def test_many_superstep_kernel_completes(spark):
     pr = pagerank(g, fixed_iters=30, tol=None)
     rows = {r["id"]: r["rank"] for r in pr.collect()}
     assert abs(sum(rows.values()) - 1.0) < 1e-9
+
+
+def test_local_materialize_keeps_hash_partitioning(spark):
+    """An id-repartitioned frame keeps its HashPartitioning on the
+    materialized leaf, which lets the next superstep's id-keyed join skip
+    the exchange; Spark-internal drift must raise, not drop it."""
+    df = local_materialize(spark.range(100).repartition("id"))
+    leaf = df._jdf.queryExecution().analyzed()
+    assert leaf.getClass().getSimpleName() == "LogicalRDD"
+    part = leaf.outputPartitioning()
+    assert part.getClass().getSimpleName() == "HashPartitioning"
+    assert [e.sql() for e in _seq(part.expressions())] == ["id"]
+    assert df.count() == 100
+
+
+def _seq(scala_seq):
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
