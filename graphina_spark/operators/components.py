@@ -16,6 +16,10 @@ Finding Connected Components in MapReduce):
 The neighbor exchange is one join + min-aggregation per superstep (map-side
 partial agg combines messages before the shuffle); the compression join makes
 label trees collapse so rounds ≈ O(log diameter) instead of O(diameter).
+A superstep plans three exchanges and no broadcast: the min-aggregation,
+the compression join's left side keyed by label, and the new labels
+re-keyed by id, which the changed-count join and the next superstep's joins
+then use without an exchange.
 The shared loop (:mod:`graphina_spark.plans.superstep`) runs the supersteps
 and stops at zero changed labels.
 """
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.materialize import local_materialize, partitioned_cache
 from graphina_spark.plans.superstep import changed_count, run_supersteps
 
 
@@ -42,32 +47,38 @@ def connected_components(
     Works for undirected graphs and as **weakly** connected components for
     directed graphs (edges followed both ways, connected_components.rs:83-117).
     """
-    sym = g.undirected_view().select("src", "dst").repartition("src").cache()
+    sym = partitioned_cache(g.undirected_view().select("src", "dst").repartition("src"))
 
-    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+    def step(labels: DataFrame, cache) -> DataFrame:
         nbr_min = (
-            labels.alias("l")
-            .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
+            sym.alias("e")
+            .join(labels.alias("l").hint("shuffle_hash"), F.col("l.id") == F.col("e.src"))
             .groupBy(F.col("e.dst").alias("id"))
             .agg(F.min("l.component").alias("nbr"))
         )
-        new = (
-            labels.join(nbr_min, "id", "left")
-            .select("id", F.least("component", F.coalesce("nbr", "component")).alias("component"))
+        # both sides of the pointer jump read it: materialized (lazily, by
+        # the new state's job) so that neither side recomputes it
+        new = local_materialize(
+            labels.join(nbr_min.hint("shuffle_hash"), "id", "left")
+            .select("id", F.least("component", F.coalesce("nbr", "component")).alias("component")),
+            eager=False,
         )
         # pointer jump: follow my label's current label
-        new = (
+        return (
             new.alias("a")
             .join(
                 new.select(
                     F.col("id").alias("component"), F.col("component").alias("cc")
-                ).alias("b"),
+                ).alias("b").hint("shuffle_hash"),
                 "component",
                 "left",
             )
             .select(F.col("a.id").alias("id"), F.coalesce("cc", "component").alias("component"))
+            # the pointer jump leaves the rows keyed by component; re-key by
+            # id here, so the score's and the next step's id joins need no
+            # exchange
+            .repartition("id")
         )
-        return new, []
 
     return run_supersteps(
         g.vertices.sparkSession, "cc",

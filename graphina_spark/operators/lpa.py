@@ -17,7 +17,9 @@ strategy the reference's oracle uses for Louvain (modularity, not labels).
 
 Superstep = join labels→edges, groupBy(dst,label).count(), then a
 packed-long argmax (plans/argmax.py) — two shuffles, both HASH
-aggregations with map-side partial combine and no sort anywhere.  The
+aggregations with map-side partial combine and no sort anywhere; the
+labels→edges join and the update join are co-partitioned by id, and no
+join is a broadcast (plans/superstep.py pins the plan).  The
 controlled within-JVM comparison of the four argmax formulations
 (BENCH/argmax_bench.py; table in plans/argmax.py) puts the packed
 encoding first at every parallelism level — 4.5× over the original
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.argmax import argmax_long
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.materialize import partitioned_cache
 from graphina_spark.plans.superstep import changed_count, run_supersteps
 
 
@@ -69,8 +72,8 @@ def _neighbor_vote(labels: DataFrame, sym: DataFrame, am_kw: dict) -> DataFrame:
     """(id, new_label): the most frequent label among each vertex's
     neighbors in ``labels``, ties broken (count desc, label asc)."""
     freq = (
-        labels.alias("l")
-        .join(sym.alias("e"), F.col("l.id") == F.col("e.src"))
+        sym.alias("e")
+        .join(labels.alias("l").hint("shuffle_hash"), F.col("l.id") == F.col("e.src"))
         .groupBy(F.col("e.dst").alias("id"), F.col("l.label"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -91,16 +94,15 @@ def label_propagation(
     if g.vertices.isEmpty():
         raise ValueError("label propagation on empty graph")
 
-    sym = g.undirected_view().select("src", "dst").repartition("src").cache()
+    sym = partitioned_cache(g.undirected_view().select("src", "dst").repartition("src"))
     # computed inside the first superstep, so a raise there still releases sym
     am_kw = functools.cache(lambda: _argmax_bounds(sym, g.vertices, "id"))
 
-    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+    def step(labels: DataFrame, cache) -> DataFrame:
         best = _neighbor_vote(labels, sym, am_kw())
-        new = labels.join(best, "id", "left").select(
+        return labels.join(best.hint("shuffle_hash"), "id", "left").select(
             "id", F.coalesce("new_label", "label").alias("label")
         )
-        return new, []
 
     return run_supersteps(
         g.vertices.sparkSession, "lpa",
@@ -131,31 +133,30 @@ def seeded_label_propagation(
     labels→edges join (only the labeled subset probes the edge frame, so
     early rounds are *cheaper* than full LPA), one (dst, label) count with
     map-side combine, one per-vertex packed-long hash-agg argmax (the same
-    sort-free shape as :func:`label_propagation`); the clamp is a broadcast
-    left join against the seed frame.  DuckDB twin:
+    sort-free shape as :func:`label_propagation`); the clamp is a
+    shuffled-hash left join against the seed frame.  DuckDB twin:
     oracles.py::seeded_lpa_web_sql (unrolled, AS MATERIALIZED per round).
     """
     if fixed_iters <= 0:
         raise ValueError("fixed_iters must be positive")
-    sym = g.undirected_view().select("src", "dst").repartition("src").cache()
+    sym = partitioned_cache(g.undirected_view().select("src", "dst").repartition("src"))
     seed = seeds.select("id", F.col("label").cast("long").alias("_seed"))
     am_kw = functools.cache(lambda: _argmax_bounds(
         sym, seed.where(F.col("_seed").isNotNull()), "_seed"
     ))
 
-    def step(labels: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+    def step(labels: DataFrame, cache) -> DataFrame:
         best = _neighbor_vote(
             labels.where(F.col("label").isNotNull()), sym, am_kw()
         )
-        new = (
-            labels.join(seed, "id", "left")
-            .join(best, "id", "left")
+        return (
+            labels.join(seed.hint("shuffle_hash"), "id", "left")
+            .join(best.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
                 F.coalesce("_seed", "new_label", "label").alias("label"),
             )
         )
-        return new, []
 
     return run_supersteps(
         g.vertices.sparkSession, "seeded_lpa",

@@ -13,24 +13,32 @@ variant (personalized_pagerank.rs:24-120).  Pinned conventions:
   ``d·Σ_{u→v} pr[u]·w(u,v)/w_out[u]`` (:102-115)
 - convergence: **L1** ``Σ|pr_new - pr| < tol`` (:117-127); result sums to 1
 
-Spark execution model — one superstep shape:
+Spark execution model — one superstep shape, one exchange:
 
 - ``edges_norm(src, dst, w_norm)`` is precomputed once, hash-partitioned by
-  ``src`` and cached — the join with the rank vector reuses that partitioning
-  so only the (much smaller) rank frame shuffles;
-- gather = ``groupBy(dst).sum`` benefits from partial (map-side) aggregation,
-  so hub vertices receive pre-combined messages, not one row per in-edge;
+  ``src`` into the shuffle-partition count and cached with that
+  partitioning; ``vinfo(id, p)`` likewise by ``id``;
+- the rank state is hash-partitioned by ``id`` (it is the output of the
+  ``vinfo`` join, materialized keeping its partitioning), so the
+  ``ranks.id = edges.src`` join is co-partitioned: a shuffled-hash join
+  that builds the ranks and moves no rank row;
+- gather = ``groupBy(dst).sum`` is the superstep's one exchange, with
+  partial (map-side) aggregation, so hub vertices receive pre-combined
+  messages, not one row per in-edge;
 - dangling mass rides the SAME message shuffle as the gather: every dangling
   vertex gets one virtual edge to the sink id ``-1`` with weight 1, so
   ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group.  Vertex
   id ``-1`` is reserved;
-- the gathered frame is cached, and the superstep's gather action reads the
-  1-row sink group back as the dangling-mass scalar (a Python float); the new
-  ranks are the cached gather joined to the vertex frame, with the scalar
-  folded in as a literal;
+- the gathered frame is cached (by the loop, so it is released on every
+  exit path), and the superstep's action collects its 1-row sink group as
+  the dangling-mass scalar (a Python float); the new ranks are the cached
+  gather joined to ``vinfo`` — co-partitioned by ``id``, no exchange — with
+  the scalar folded in as a literal;
 - the shared loop (:mod:`graphina_spark.plans.superstep`) runs the
-  supersteps; the ranks are its ``read_once`` state (one gather join reads
-  them per superstep), and ``tol`` its stop on the L1 delta.
+  supersteps with AQE and auto-broadcast off, so no join turns into a
+  broadcast whatever the graph's size; the ranks are its ``read_once``
+  state (one gather join reads them per superstep), and ``tol`` its stop
+  on the L1 delta (a co-partitioned join of the new and old ranks).
 
 At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
 gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof;
@@ -45,6 +53,7 @@ from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.checkpoint import CheckpointManager
+from graphina_spark.plans.materialize import partitioned_cache
 from graphina_spark.plans.superstep import run_supersteps
 
 # Symmetrized-edge count below which pagerank(shards=...) falls back to the
@@ -127,7 +136,7 @@ def pagerank(
     base = g.vertices.select("id")
     if personalization is not None:
         base = base.join(personalization, "id", "left")
-    vinfo = base.select("id", pcol.alias("p")).repartition("id").cache()
+    vinfo = partitioned_cache(base.select("id", pcol.alias("p")).repartition("id"))
     release = [vinfo]
     if shards is None:
         sym = g.symmetric_edges()
@@ -143,12 +152,11 @@ def pagerank(
                 F.lit(1.0).alias("w_norm"),
             )
         )
-        edges_norm = (
+        edges_norm = partitioned_cache(
             sym.join(wout, "src")
             .select("src", "dst", (F.col("weight") / F.col("w_out")).alias("w_norm"))
             .unionByName(sink_edges)
             .repartition("src")
-            .cache()
         )
         release.append(edges_norm)
 
@@ -162,13 +170,13 @@ def pagerank(
             "id", (F.coalesce("value", F.lit(0.0)) / F.lit(ssum)).alias("rank")
         )
 
-    def step(ranks: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
+    def step(ranks: DataFrame, cache) -> DataFrame:
         if shards is not None:
             gathered = shards.gather(ranks, value="rank")
         else:
             gathered = (
-                ranks.alias("r")
-                .join(edges_norm.alias("e"), F.col("r.id") == F.col("e.src"))
+                edges_norm.alias("e")
+                .join(ranks.alias("r").hint("shuffle_hash"), F.col("r.id") == F.col("e.src"))
                 .select(
                     F.col("e.dst").alias("id"),
                     (F.col("r.rank") * F.col("e.w_norm")).alias("c"),
@@ -176,17 +184,14 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("c").alias("gather"))
             )
-        gathered = gathered.cache()
+        gathered = cache(gathered)
         # THE superstep action: runs the gather (and a deferred rank
         # materialization of the previous superstep), fills the cache, and
         # returns the sink group — the dangling mass — as a float
-        dang = (
-            gathered.where(F.col("id") == -1)
-            .agg(F.coalesce(F.sum("gather"), F.lit(0.0)))
-            .first()[0]
-        )
+        sink = gathered.where(F.col("id") == -1).select("gather").collect()
+        dang = sink[0][0] if sink else 0.0
         # the -1 sink row drops out of the left join (vinfo has no -1)
-        new_ranks = vinfo.join(gathered, "id", "left").select(
+        return vinfo.join(gathered.hint("shuffle_hash"), "id", "left").select(
             "id",
             (
                 (1.0 - damping) * F.col("p")
@@ -194,12 +199,11 @@ def pagerank(
                 + F.lit(damping) * F.coalesce("gather", F.lit(0.0))
             ).alias("rank"),
         )
-        return new_ranks, [gathered]
 
     def l1_delta(new: DataFrame, old: DataFrame) -> float:
         return (
             new.alias("a")
-            .join(old.alias("b"), "id")
+            .join(old.alias("b").hint("shuffle_hash"), "id")
             .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))))
             .first()[0]
         )

@@ -93,7 +93,8 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path(iteration))
-        return spark.read.parquet(path)
+        # the written schema: reading it back infers nothing, so no job
+        return spark.read.schema(df.schema).parquet(path)
 
     def latest(self, spark: SparkSession) -> tuple[int, DataFrame, dict] | None:
         """Most recent *complete* iteration (manifest present and matching

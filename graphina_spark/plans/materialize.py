@@ -21,10 +21,12 @@ rank-vector exchange entirely — one shuffle per superstep (the message
 aggregation) instead of two or three.  At 10^12 vertices the rank vector
 re-shuffle this removes is ~16 TB of needless network per superstep.
 
-The trade: checkpointed frames lose their inherited "small" size and are no
-longer auto-broadcast — the right default for web-scale supersteps (a rank
-vector never broadcasts at 10^12 vertices; sessions from
-``graphina_spark.session.get_spark`` prefer shuffled-hash joins instead).
+Checkpointed frames lose their inherited "small" size as well, so even
+outside the superstep loop a materialized state is not auto-broadcast (a
+rank vector never broadcasts at 10^12 vertices).  Inside the loop the join
+plan does not rest on size estimates at all: plans/superstep.py turns
+auto-broadcast off and every graph-sized kernel join carries a
+``shuffle_hash`` hint.
 
 The re-wrap calls JVM-internal constructors of the pinned Spark: if they
 drift it raises, never silently dropping the stats fix or the partitioning.
@@ -33,6 +35,10 @@ drift it raises, never silently dropping the stats fix or the partitioning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from graphina_spark.session import pinned_conf
+
+_AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
 
 
 def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -58,24 +64,23 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     superstep kernels keep the session's AQE setting.
     """
     spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with pinned_conf(spark, _AQE_OFF):
         ck = df.localCheckpoint(eager=eager)
-    finally:
-        spark.conf.set(key, prev)
     # rebuild the LogicalRDD leaf minus originStats/originConstraints.
     # Constructor (Spark 4.x): LogicalRDD(output, rdd, outputPartitioning,
     # outputOrdering, isStreaming, stream: Option)(session, originStats:
     # Option, originConstraints: Option) — curried lists flatten in bytecode.
+    # The output is the executed plan's: the checkpoint's partitioning and
+    # ordering name its attributes, which differ from the logical output
+    # where the optimizer dropped an ``x AS x`` alias (the partitioning
+    # would then match no output column and be useless).
     jvm = spark.sparkContext._jvm
     leaf = ck._jdf.queryExecution().analyzed()
     if leaf.getClass().getName() != "org.apache.spark.sql.execution.LogicalRDD":
         raise TypeError("checkpoint did not produce a LogicalRDD leaf")
     none = jvm.scala.Option.empty()
     fresh_leaf = jvm.org.apache.spark.sql.execution.LogicalRDD(
-        leaf.output(),
+        df._jdf.queryExecution().executedPlan().output(),
         leaf.rdd(),
         leaf.outputPartitioning(),
         leaf.outputOrdering(),
@@ -89,3 +94,13 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         spark._jsparkSession, fresh_leaf
     )
     return DataFrame(jdf, spark)
+
+
+def partitioned_cache(df: DataFrame) -> DataFrame:
+    """``df.cache()`` with the cached plan built with AQE off (Spark plans
+    it when ``cache()`` is called).  An adaptive cached plan reports
+    ``UnknownPartitioning``, so every superstep join against it would
+    re-shuffle the cached side; this one keeps the frame's hash
+    partitioning, like :func:`local_materialize`."""
+    with pinned_conf(df.sparkSession, _AQE_OFF):
+        return df.cache()

@@ -16,12 +16,24 @@ points the in-memory version doesn't need:
    one-off cost; the deterministic order also makes shard contents
    reproducible across runs/cluster sizes.
 
-2. **Skew-proof gather** — the per-superstep join replicates each hub's rank
-   row once per salt (broadcast hub-salt map + ``explode(sequence(...))`` —
-   no shuffle), then joins on (src, salt) so a hub's scatter work spreads
-   across as many tasks as it has salt rows.  Message aggregation
-   (``groupBy(dst).sum``) gets map-side partial aggregation from Spark, which
-   defuses *in*-degree hubs symmetrically.
+2. **Skew-proof gather** — whether any source is salted (out-degree >
+   ``salt_cap``) is decided once, at build time, on the driver
+   (``AdjShards.salted``):
+
+   - **unsalted** (the common case, and both benchmark graphs): the shards
+     are hash-partitioned by ``src`` into ``spark.sql.shuffle.partitions``
+     partitions — the partitioner of the id-partitioned rank frame — so
+     the per-superstep ``ranks.id = shards.src`` join is co-partitioned and
+     moves no rank row.  The superstep's only exchange is the message
+     aggregation;
+   - **salted**: the join replicates each hub's rank row once per salt
+     (broadcast hub-salt map + ``explode(sequence(...))``), then joins on
+     (src, salt) against shards partitioned by (src, salt), so a hub's
+     scatter work spreads across as many tasks as it has salt rows; the
+     replicated rank frame is re-shuffled to meet them.
+
+   Message aggregation (``groupBy(dst).sum``) gets map-side partial
+   aggregation from Spark, which defuses *in*-degree hubs symmetrically.
 
 Why shards beat the plain per-edge join at scale: the rank⋈adjacency join
 moves one row per (src, salt) — ~|V| rows — instead of one row per edge
@@ -38,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
+from graphina_spark.plans.materialize import partitioned_cache
 
 DEFAULT_SALT_CAP = 100_000
 
@@ -48,6 +61,8 @@ class AdjShards:
 
     shards: DataFrame  # (bucket, salt, src, dst_list, w_list, degree, w_out)
     salt_map: DataFrame  # (src, n_salt) — hubs only (n_salt > 1); broadcast side
+    salted: bool  # some src has n_salt > 1; False: shards are partitioned
+    # by src alone and the gather joins the ranks without salt_map
     wout: DataFrame  # (src, w_out, degree, _wlo, _whi) — scatter-active
     # vertices; _wlo/_whi are the per-src weight extrema behind the uniform
     # auto-detect
@@ -68,22 +83,25 @@ class AdjShards:
     def gather(self, ranks: DataFrame, value: str = "rank") -> DataFrame:
         """One superstep's message wave: Σ_{u→v} value[u]·w_norm(u,v) → (id,
         gather).  ``ranks`` is (id, <value>)."""
-        replicated = (
-            ranks.join(F.broadcast(self.salt_map), ranks["id"] == self.salt_map["src"], "left")
-            .select(
+        if self.salted:
+            src = ranks.join(
+                F.broadcast(self.salt_map), ranks["id"] == self.salt_map["src"], "left"
+            ).select(
                 ranks["id"].alias("src"),
                 F.col(value).alias("_v"),
                 F.explode(
                     F.sequence(F.lit(0), F.coalesce(F.col("n_salt"), F.lit(1)) - 1)
                 ).alias("salt"),
             )
-        )
+            joined = self.shards.join(src.hint("shuffle_hash"), ["src", "salt"])
+        else:
+            src = ranks.select(F.col("id").alias("src"), F.col(value).alias("_v"))
+            joined = self.shards.join(src.hint("shuffle_hash"), "src")
         if self.uniform:
             # w_norm = 1/degree computed, never scanned; dangling-sink rows
             # (degree 0, virtual w 1.0) pass the rank through unscaled
             return (
-                self.shards.join(replicated, ["src", "salt"])
-                .select(
+                joined.select(
                     F.explode("dst_list").alias("_dst"),
                     F.col("_v"),
                     F.col("degree"),
@@ -98,8 +116,7 @@ class AdjShards:
                 .agg(F.sum("_c").alias("gather"))
             )
         return (
-            self.shards.join(replicated, ["src", "salt"])
-            .select(
+            joined.select(
                 F.explode(F.arrays_zip("dst_list", "w_list")).alias("z"),
                 F.col("_v"),
             )
@@ -117,7 +134,6 @@ class AdjShards:
 def build_adj_shards(
     g: LinkGraph,
     salt_cap: int = DEFAULT_SALT_CAP,
-    n_buckets: int | None = None,
     dangling_sink: bool = True,
     compact: bool = False,
 ) -> AdjShards:
@@ -133,7 +149,12 @@ def build_adj_shards(
     Constant edge weights are auto-detected from per-src weight extrema
     folded into the wout aggregation (no extra edge scan; one tiny reduce
     over the per-src frame): the shards then store no w_list and the gather
-    computes w_norm = 1/degree (``AdjShards.uniform``).
+    computes w_norm = 1/degree (``AdjShards.uniform``).  The same reduce
+    reads the maximum degree, which decides ``AdjShards.salted``.
+
+    The shards are partitioned into ``spark.sql.shuffle.partitions``
+    partitions — the rank frame's — by ``src`` (by ``(src, salt)`` when
+    salted); ``bucket`` is the src hash bucket over that count.
 
     ``compact=True`` stores ``dst_list`` as array<int> and ``w_list`` as
     array<float> — 12 bytes/edge of superstep scan traffic instead of 16 at
@@ -148,8 +169,7 @@ def build_adj_shards(
     against the float64 kernel).
     """
     spark = g.edges.sparkSession
-    if n_buckets is None:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = g.symmetric_edges()
     # per-src weight extrema piggyback on the wout aggregation, so the
     # constant-weight auto-detect folds into the edge pass that
@@ -161,9 +181,13 @@ def build_adj_shards(
         F.max("weight").alias("_whi"),
     ).cache()
     # constant edge weight => w_norm is exactly 1/degree, so w_list need
-    # not be stored or scanned
-    mm = wout.agg(F.min("_wlo").alias("lo"), F.max("_whi").alias("hi")).first()
+    # not be stored or scanned; no src above salt_cap => no salt rows
+    mm = wout.agg(
+        F.min("_wlo").alias("lo"), F.max("_whi").alias("hi"),
+        F.max("degree").alias("dmax"),
+    ).first()
     uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
+    salted = mm["dmax"] is not None and mm["dmax"] > salt_cap
     from pyspark.sql import Window
 
     rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
@@ -218,10 +242,10 @@ def build_adj_shards(
             .select(*sink_cols)
         )
         grouped = grouped.unionByName(sink_rows)
-    shards = (
+    keys = ["src", "salt"] if salted else ["src"]
+    shards = partitioned_cache(
         grouped.withColumn("bucket", F.pmod(F.hash("src"), F.lit(n_buckets)))
-        .repartition(n_buckets, "src", "salt")
-        .cache()
+        .repartition(n_buckets, *keys)
     )
     salt_map = (
         wout.where(F.col("degree") > salt_cap)
@@ -231,6 +255,7 @@ def build_adj_shards(
     return AdjShards(
         shards=shards,
         salt_map=salt_map,
+        salted=salted,
         wout=wout,
         salt_cap=salt_cap,
         dangling_sink=dangling_sink,

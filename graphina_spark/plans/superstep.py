@@ -1,17 +1,32 @@
 """The superstep loop of PageRank, connected components and label
 propagation: a kernel supplies its initial state and its step, the loop
 owns resume, materialization, checkpointing, the stop rule, ``stats``, job
-descriptions (``<kernel>:init``, ``<kernel>:<iteration>``) and cache release.
+descriptions (``<kernel>:init``, ``<kernel>:<iteration>``), the plan pins
+and cache release.
+
+Pinned plans — a superstep's physical plan must not change shape with the
+input size or the session's defaults.  Inside the loop AQE is off (shapes
+are static and pre-partitioned, the rule plans/materialize.py follows) and
+``autoBroadcastJoinThreshold`` is -1, so no graph-sized frame turns into a
+broadcast once it is small enough; every graph-sized join a kernel makes is
+marked ``hint("shuffle_hash")`` on the side to build (without the hint
+Spark plans sort-merge joins).  The state stays hash-partitioned by id, so
+id-keyed joins against the state and against id/src-partitioned frames
+cached with ``partitioned_cache`` run without an exchange.  Both confs go
+back to the caller's values on exit.
 
 Materialization rule — every state is materialized, so the plan never grows
 and the next step's id-keyed join stays exchange-free (plans/materialize.py):
 eagerly when a ``score`` is taken (the score and the next step both read
-it); else through ``checkpoint.save`` when a checkpoint is given (saved
-after the score in every case, the score as the manifest's ``delta``); else
+it) or a checkpoint is given (the materialized frame, not the parquet
+read-back, carries the partitioning into the next step; ``checkpoint.save``
+writes it after the score, the score as the manifest's ``delta``); else
 lazily when the kernel declares ``read_once`` (the next step reads the state
 in one action, which then runs the materialization), and eagerly otherwise.
-A step's cached frames are released once the next step has returned, since
-its action may run a lazy materialization that reads them.
+A step caches frames through the loop's ``cache``, so they are released on
+every exit path, even when the step's own action raises; they are released
+once the next step has returned, since its action may run a lazy
+materialization that reads them.
 """
 
 from __future__ import annotations
@@ -23,8 +38,13 @@ from pyspark.sql import functions as F
 
 from graphina_spark.plans.checkpoint import CheckpointManager
 from graphina_spark.plans.materialize import local_materialize
+from graphina_spark.session import pinned_conf
 
 _JOB_DESCRIPTION = "spark.job.description"
+_PINNED = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def changed_count(col: str) -> Callable[[DataFrame, DataFrame], int]:
@@ -32,7 +52,7 @@ def changed_count(col: str) -> Callable[[DataFrame, DataFrame], int]:
     ``tol=1`` the loop stops once no label changed."""
     return lambda new, old: (
         new.alias("n")
-        .join(old.alias("o"), "id")
+        .join(old.alias("o").hint("shuffle_hash"), "id")
         .where(F.col(f"n.{col}") != F.col(f"o.{col}"))
         .count()
     )
@@ -42,7 +62,7 @@ def run_supersteps(
     spark: SparkSession,
     kernel: str,
     init: Callable[[], DataFrame],
-    step: Callable[[DataFrame], tuple[DataFrame, list[DataFrame]]],
+    step: Callable[[DataFrame, Callable[[DataFrame], DataFrame]], DataFrame],
     n_iters: int,
     score: Callable[[DataFrame, DataFrame], float] | None = None,
     tol: float = 0.0,
@@ -53,43 +73,48 @@ def run_supersteps(
     read_once: bool = False,
 ) -> DataFrame:
     """Return the state after at most ``n_iters`` supersteps (resumed ones
-    included) of ``state, cached = step(state)``, stopping early once
-    ``score(new, old) < tol``.  ``init()`` runs only when nothing is
-    resumed.  ``stats`` receives ``{"iterations", "delta"}`` (the last
-    score).  ``release`` frames are unpersisted on every exit path."""
+    included) of ``state = step(state, cache)``, stopping early once
+    ``score(new, old) < tol``.  ``cache(df)`` returns ``df`` cached and
+    owned by the loop.  ``init()`` runs only when nothing is resumed.
+    ``stats`` receives ``{"iterations", "delta"}`` (the last score).
+    ``release`` frames are unpersisted on every exit path."""
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty(_JOB_DESCRIPTION)
-    held: list[DataFrame] = []
-    try:
-        sc.setJobDescription(f"{kernel}:init")
-        found = checkpoint.latest(spark) if checkpoint is not None and resume else None
-        start, state = (found[0] + 1, found[1]) if found else (0, init())
-        state = local_materialize(state)
+    held: list[DataFrame] = []  # the previous step's cached frames
+    fresh: list[DataFrame] = []  # the running step's
 
-        lazy = read_once and score is None and checkpoint is None
-        for it in range(start, n_iters):
-            sc.setJobDescription(f"{kernel}:{it}")
-            new, cached = step(state)
-            for df in held:
-                df.unpersist()
-            held = cached
-            s = None
-            if score is not None:
-                new = local_materialize(new)
-                s = score(new, state)
-            if checkpoint is not None:
-                new = checkpoint.save(spark, new, it, delta=s)
-            elif score is None:
+    def cache(df: DataFrame) -> DataFrame:
+        fresh.append(df.cache())
+        return fresh[-1]
+
+    try:
+        with pinned_conf(spark, _PINNED):
+            sc.setJobDescription(f"{kernel}:init")
+            found = checkpoint.latest(spark) if checkpoint is not None and resume else None
+            start, state = (found[0] + 1, found[1]) if found else (0, init())
+            state = local_materialize(state)
+
+            lazy = read_once and score is None and checkpoint is None
+            for it in range(start, n_iters):
+                sc.setJobDescription(f"{kernel}:{it}")
+                new = step(state, cache)
+                for df in held:
+                    df.unpersist()
+                held = fresh[:]
+                fresh.clear()
                 new = local_materialize(new, eager=not lazy)
-            state = new
-            if stats is not None:
-                stats.update(iterations=it + 1, delta=s)
-            if s is not None and s < tol:
-                break
-        if lazy and start < n_iters:
-            state.count()  # run the last deferred materialization
-        return state
+                s = score(new, state) if score is not None else None
+                if checkpoint is not None:
+                    checkpoint.save(spark, new, it, delta=s)
+                state = new
+                if stats is not None:
+                    stats.update(iterations=it + 1, delta=s)
+                if s is not None and s < tol:
+                    break
+            if lazy and start < n_iters:
+                state.count()  # run the last deferred materialization
+            return state
     finally:
-        for df in (*held, *release):
+        for df in (*held, *fresh, *release):
             df.unpersist()
         sc.setLocalProperty(_JOB_DESCRIPTION, caller_desc)

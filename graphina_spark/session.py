@@ -6,7 +6,9 @@ ship in ``spark-submit --conf`` flags on a real cluster (see jobs/).
 
 from __future__ import annotations
 
+import contextlib
 import os
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -44,9 +46,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # graph supersteps join a rank vector against pre-partitioned
-        # adjacency: shuffled-hash beats sort-merge (no per-iteration sort of
-        # the big side); Catalyst still picks broadcast when a side is small
+        # shuffled-hash beats sort-merge for ad-hoc joins (no sort of the
+        # big side); the superstep kernels do not depend on it: they pin
+        # their own plans (plans/superstep.py)
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -60,3 +62,20 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def pinned_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` for the block, then give each key back the caller's
+    value, or unset it if the caller had not set it."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

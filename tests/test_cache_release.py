@@ -75,3 +75,31 @@ def test_raising_kernel_leaves_cache_manager_empty(spark, kernel):
     with pytest.raises(exc):
         call(g)
     assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("path", ["plain", "shards"])
+def test_raising_sink_read_leaves_cache_manager_empty(spark, monkeypatch, path):
+    """A PageRank step caches its gather, then reads the sink group: when
+    that read raises, the gather it just cached is released too."""
+    g = make_graph(spark, EDGES, n=7, directed=True)
+    spark.catalog.clearCache()
+    adj = build_adj_shards(g) if path == "shards" else None
+    cls = type(g.vertices)
+    real = cls.collect
+    raised = []
+
+    def collect(self):
+        # the step's action is the first collect after the set-up
+        if not raised:
+            raised.append(1)
+            raise RuntimeError("sink read failed")
+        return real(self)
+
+    monkeypatch.setattr(cls, "collect", collect)
+    with pytest.raises(RuntimeError, match="sink read failed"):
+        pagerank(g, fixed_iters=3, tol=None, shards=adj, shards_min_edges=0)
+    monkeypatch.undo()
+    assert raised
+    if adj is not None:
+        adj.unpersist()
+    assert _cache_empty(spark)

@@ -64,6 +64,21 @@ def test_local_materialize_keeps_hash_partitioning(spark):
     assert df.count() == 100
 
 
+def test_local_materialize_partitioning_survives_dropped_alias(spark):
+    """``col AS id`` over an ``id`` attribute is dropped by the optimizer, so
+    the executed plan partitions by the source attribute: the materialized
+    leaf must still be partitioned by one of its own output columns."""
+    base = spark.range(100).select("id", (F.col("id") % 7).alias("x"))
+    df = local_materialize(
+        base.alias("a").select(F.col("a.id").alias("id"), "x").repartition("id")
+    )
+    leaf = df._jdf.queryExecution().analyzed()
+    part = leaf.outputPartitioning()
+    assert part.getClass().getSimpleName() == "HashPartitioning"
+    assert part.references().subsetOf(leaf.outputSet())
+    assert df.columns == ["id", "x"] and df.count() == 100
+
+
 def _seq(scala_seq):
     it = scala_seq.iterator()
     while it.hasNext():
