@@ -329,6 +329,10 @@ def encode_png(img: np.ndarray, filter_cycle: bool = True) -> bytes:
 
 def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> list[int]:
     """GIF-flavor LZW (variable width, clear/EOI codes, LSB-first bits)."""
+    if min_code_size > 8:
+        # palette indices have at most 8 bits; a larger size would build a
+        # 2**size-entry code table before reading a single code
+        raise ValueError(f"GIF LZW minimum code size {min_code_size} exceeds 8")
     clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
     out: list[int] = []
     table: list[list[int]] = [[i] for i in range(clear)] + [[], []]
@@ -831,8 +835,16 @@ def decode_jpeg(blob: bytes) -> "np.ndarray":
                 stabs[cid] = (tt >> 4, tt & 0x0F)
             h, w, comps = frame
             data = blob[pos:]
-            br = _BitReader(data)
             bh, bwd = (h + 7) // 8, (w + 7) // 8
+            # every 8x8 block of every component codes at least a DC size
+            # and an EOB, one bit each: reject a short scan before the
+            # planes (8 bytes per pixel and component) are allocated
+            if 8 * len(data) < 2 * bh * bwd * len(comps):
+                raise ValueError(
+                    f"truncated JPEG scan: {len(data)} bytes for "
+                    f"{bh * bwd * len(comps)} blocks"
+                )
+            br = _BitReader(data)
             planes = [np.zeros((bh * 8, bwd * 8)) for _ in comps]
             preds = [0] * len(comps)
             for by in range(bh):

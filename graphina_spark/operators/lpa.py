@@ -134,13 +134,18 @@ def seeded_label_propagation(
     early rounds are *cheaper* than full LPA), one (dst, label) count with
     map-side combine, one per-vertex packed-long hash-agg argmax (the same
     sort-free shape as :func:`label_propagation`); the clamp is a
-    shuffled-hash left join against the seed frame.  DuckDB twin:
+    shuffled-hash left join against the seed frame, cached once
+    partitioned by id, so it moves no seed row.  DuckDB twin:
     oracles.py::seeded_lpa_web_sql (unrolled, AS MATERIALIZED per round).
     """
     if fixed_iters <= 0:
         raise ValueError("fixed_iters must be positive")
+    # caching plans the frame, and a bad literal seed label fails its cast
+    # there: cache the seeds before sym, so such a raise leaves nothing cached
+    seed = partitioned_cache(
+        seeds.select("id", F.col("label").cast("long").alias("_seed")).repartition("id")
+    )
     sym = partitioned_cache(g.undirected_view().select("src", "dst").repartition("src"))
-    seed = seeds.select("id", F.col("label").cast("long").alias("_seed"))
     am_kw = functools.cache(lambda: _argmax_bounds(
         sym, seed.where(F.col("_seed").isNotNull()), "_seed"
     ))
@@ -163,5 +168,5 @@ def seeded_label_propagation(
         lambda: g.vertices.select("id")
         .join(seed, "id", "left")
         .select("id", F.col("_seed").alias("label")),
-        step, fixed_iters, release=[sym],
+        step, fixed_iters, release=[sym, seed],
     )

@@ -36,9 +36,8 @@ Spark execution model — one superstep shape, one exchange:
   the scalar folded in as a literal;
 - the shared loop (:mod:`graphina_spark.plans.superstep`) runs the
   supersteps with AQE and auto-broadcast off, so no join turns into a
-  broadcast whatever the graph's size; the ranks are its ``read_once``
-  state (one gather join reads them per superstep), and ``tol`` its stop
-  on the L1 delta (a co-partitioned join of the new and old ranks).
+  broadcast whatever the graph's size; ``tol`` is its stop on the L1
+  delta (a co-partitioned join of the new and old ranks).
 
 At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
 gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof;
@@ -185,9 +184,9 @@ def pagerank(
                 .agg(F.sum("c").alias("gather"))
             )
         gathered = cache(gathered)
-        # THE superstep action: runs the gather (and a deferred rank
-        # materialization of the previous superstep), fills the cache, and
-        # returns the sink group — the dangling mass — as a float
+        # THE superstep action: runs the gather (and the ranks' deferred
+        # materialization, unless a score or save ran it), fills the cache,
+        # and returns the sink group — the dangling mass — as a float
         sink = gathered.where(F.col("id") == -1).select("gather").collect()
         dang = sink[0][0] if sink else 0.0
         # the -1 sink row drops out of the left join (vinfo has no -1)
@@ -213,7 +212,7 @@ def pagerank(
         score=l1_delta if tol is not None and fixed_iters is None else None,
         tol=tol or 0.0,
         checkpoint=checkpoint, resume=resume, stats=stats,
-        release=release, read_once=True,
+        release=release,
     )
     return ranks.select("id", "rank")
 

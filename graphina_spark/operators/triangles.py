@@ -57,8 +57,9 @@ def _oriented_edges(g: LinkGraph) -> tuple[DataFrame, DataFrame]:
 
 def triangle_corners(g: LinkGraph) -> DataFrame:
     """Each triangle once as (a, b, c) corner ids."""
+    # not cached: a cache would outlive the call, and the three reads of
+    # edir share its exchanges (exchange reuse) without one
     edir, _ = _oriented_edges(g)
-    edir = edir.cache()
     e1 = edir.select(F.col("s").alias("a"), F.col("d").alias("b"))
     e2 = edir.select(F.col("s").alias("b"), F.col("d").alias("c"))
     e3 = edir.select(F.col("s").alias("a"), F.col("d").alias("c"))

@@ -46,11 +46,14 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     preserved output partitioning.
 
     ``eager=False`` defers the checkpoint's execution to the first action
-    that reads it, so the materialization needs no job of its own.  Correct
-    ONLY when the frame is consumed exactly once before the next checkpoint
-    (a doubly-referenced lazy frame would recompute) and its inputs stay
-    cached until that action has run — plans/superstep.py decides when
-    that holds.
+    that reads it, so the materialization needs no job of its own.  The
+    checkpoint RDD is persisted from the start, so when two stages of one
+    job read the lazy frame it is computed once, and later actions read the
+    stored blocks.  Until an action has computed it, the frame is a plan
+    over its inputs: they must stay cached, and a chain of uncomputed lazy
+    frames grows the lineage like no materialization at all — :func:`settle`
+    computes it, and plans/superstep.py settles every state before it
+    releases that state's inputs.
 
     AQE is disabled around the checkpoint: physical planning happens inside
     ``localCheckpoint(eager=True)``, and under AQE the leaf comes back as
@@ -94,6 +97,15 @@ def local_materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         spark._jsparkSession, fresh_leaf
     )
     return DataFrame(jdf, spark)
+
+
+def settle(df: DataFrame) -> None:
+    """Compute a :func:`local_materialize` frame unless an action already
+    has: one RDD-level ``count()`` of its checkpoint RDD, which no SQL plan
+    wraps."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    if not rdd.isCheckpointed():
+        rdd.count()
 
 
 def partitioned_cache(df: DataFrame) -> DataFrame:

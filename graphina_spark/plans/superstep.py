@@ -15,18 +15,19 @@ id-keyed joins against the state and against id/src-partitioned frames
 cached with ``partitioned_cache`` run without an exchange.  Both confs go
 back to the caller's values on exit.
 
-Materialization rule — every state is materialized, so the plan never grows
-and the next step's id-keyed join stays exchange-free (plans/materialize.py):
-eagerly when a ``score`` is taken (the score and the next step both read
-it) or a checkpoint is given (the materialized frame, not the parquet
-read-back, carries the partitioning into the next step; ``checkpoint.save``
-writes it after the score, the score as the manifest's ``delta``); else
-lazily when the kernel declares ``read_once`` (the next step reads the state
-in one action, which then runs the materialization), and eagerly otherwise.
-A step caches frames through the loop's ``cache``, so they are released on
-every exit path, even when the step's own action raises; they are released
-once the next step has returned, since its action may run a lazy
-materialization that reads them.
+Materialization rule — every state (initial, resumed, stepped) is
+``local_materialize(..., eager=False)``, so the plan never grows and the next
+step's id-keyed join stays exchange-free (plans/materialize.py).  The first
+action that reads a state runs its materialization: the step's own action,
+the ``score`` or ``checkpoint.save`` (which writes the materialized frame,
+the score as the manifest's ``delta``; the frame, not the parquet read-back,
+carries the partitioning into the next step).  After each superstep's score
+and save the loop settles the previous state: if no action has computed it
+yet, one RDD-level ``count()`` does, so at most one uncomputed state is ever
+chained.  Only then are the frames that state was built from released; a
+step caches them through the loop's ``cache``, so they are released on every
+exit path, even when the step's own action raises.  The final state is
+settled the same way.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphina_spark.plans.checkpoint import CheckpointManager
-from graphina_spark.plans.materialize import local_materialize
+from graphina_spark.plans.materialize import local_materialize, settle
 from graphina_spark.session import pinned_conf
 
 _JOB_DESCRIPTION = "spark.job.description"
@@ -70,7 +71,6 @@ def run_supersteps(
     resume: bool = False,
     stats: dict | None = None,
     release: Sequence[DataFrame] = (),
-    read_once: bool = False,
 ) -> DataFrame:
     """Return the state after at most ``n_iters`` supersteps (resumed ones
     included) of ``state = step(state, cache)``, stopping early once
@@ -80,7 +80,7 @@ def run_supersteps(
     ``release`` frames are unpersisted on every exit path."""
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty(_JOB_DESCRIPTION)
-    held: list[DataFrame] = []  # the previous step's cached frames
+    held: list[DataFrame] = []  # the cached frames the state was built from
     fresh: list[DataFrame] = []  # the running step's
 
     def cache(df: DataFrame) -> DataFrame:
@@ -92,27 +92,24 @@ def run_supersteps(
             sc.setJobDescription(f"{kernel}:init")
             found = checkpoint.latest(spark) if checkpoint is not None and resume else None
             start, state = (found[0] + 1, found[1]) if found else (0, init())
-            state = local_materialize(state)
-
-            lazy = read_once and score is None and checkpoint is None
+            state = local_materialize(state, eager=False)
             for it in range(start, n_iters):
                 sc.setJobDescription(f"{kernel}:{it}")
-                new = step(state, cache)
+                new = local_materialize(step(state, cache), eager=False)
+                s = score(new, state) if score is not None else None
+                if checkpoint is not None:
+                    checkpoint.save(spark, new, it, delta=s)
+                settle(state)
                 for df in held:
                     df.unpersist()
                 held = fresh[:]
                 fresh.clear()
-                new = local_materialize(new, eager=not lazy)
-                s = score(new, state) if score is not None else None
-                if checkpoint is not None:
-                    checkpoint.save(spark, new, it, delta=s)
                 state = new
                 if stats is not None:
                     stats.update(iterations=it + 1, delta=s)
                 if s is not None and s < tol:
                     break
-            if lazy and start < n_iters:
-                state.count()  # run the last deferred materialization
+            settle(state)
             return state
     finally:
         for df in (*held, *fresh, *release):

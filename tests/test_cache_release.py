@@ -10,6 +10,12 @@ from conftest import make_graph
 from graphina_spark.operators.components import connected_components
 from graphina_spark.operators.lpa import label_propagation, seeded_label_propagation
 from graphina_spark.operators.pagerank import pagerank
+from graphina_spark.operators.triangles import (
+    clustering_coefficients,
+    sampled_triangle_count,
+    transitivity,
+    triangles,
+)
 from graphina_spark.plans.checkpoint import CheckpointManager
 from graphina_spark.plans.shards import build_adj_shards
 
@@ -60,7 +66,7 @@ RAISING = {
     # nstart is validated after vinfo/edges_norm are cached
     "pagerank_nstart_zero": (lambda g: pagerank(
         g, nstart=g.vertices.select("id", F.lit(0.0).alias("value"))), ValueError),
-    # a non-numeric seed label fails its cast after sym is cached
+    # a non-numeric seed label fails its cast when the seed frame is cached
     "seeded_lpa_bad_seed": (lambda g: seeded_label_propagation(
         g, g.vertices.where(F.col("id") < 2).withColumn("label", F.lit("x")),
         fixed_iters=2), NumberFormatException),
@@ -102,4 +108,32 @@ def test_raising_sink_read_leaves_cache_manager_empty(spark, monkeypatch, path):
     assert raised
     if adj is not None:
         adj.unpersist()
+    assert _cache_empty(spark)
+
+
+# function name -> (call(g), read(result) -> value, the value): one
+# triangle, 0-1-2; degrees 3, 2, 3, 1, 1, 1, 1
+TRIANGLES = {
+    "triangles": (triangles, lambda df: {r["id"]: r["triangles"] for r in df.collect()},
+                  {0: 1, 1: 1, 2: 1, 3: 0, 4: 0, 5: 0, 6: 0}),
+    "transitivity": (transitivity, lambda t: t, 3 / 7),
+    "clustering_coefficients": (
+        clustering_coefficients,
+        lambda df: {r["id"]: round(r["clustering"], 12) for r in df.collect()},
+        {0: round(1 / 3, 12), 1: 1.0, 2: round(1 / 3, 12), 3: 0.0, 4: 0.0, 5: 0.0, 6: 0.0}),
+    "sampled_triangle_count": (
+        lambda g: sampled_triangle_count(g, 1.0),
+        lambda df: tuple(df.first()), (6, 1, 1.0)),
+}
+
+
+@pytest.mark.parametrize("fn", list(TRIANGLES))
+def test_triangles_leave_cache_manager_empty(spark, fn):
+    g = make_graph(spark, EDGES, n=7, directed=False)
+    spark.catalog.clearCache()
+    call, read, want = TRIANGLES[fn]
+    out = call(g)
+    assert _cache_empty(spark)
+    # the result is still readable, and reading it caches nothing
+    assert read(out) == want
     assert _cache_empty(spark)

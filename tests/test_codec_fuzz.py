@@ -217,6 +217,19 @@ def test_gif_dimension_bomb_rejected():
         decode_gif(bytes(blob))
 
 
+def test_gif_lzw_code_size_bomb_rejected():
+    # the LZW minimum code size follows the 13-byte header, the 4-colour
+    # global palette and the 10-byte image descriptor; a size above 8
+    # used to build a 2**size-entry code table first (2**29 ran out of
+    # memory), here 2**20 entries at most
+    blob = bytearray(STREAMS["gif"])
+    pos = 13 + 4 * 3 + 10
+    assert blob[pos - 10] == 0x2C and blob[pos] == 2
+    blob[pos] = 20
+    with pytest.raises(ValueError, match="minimum code size"):
+        decode_gif(bytes(blob))
+
+
 def test_ppm_dimension_bomb_rejected():
     with pytest.raises(ValueError, match="MAX_DECODE_PIXELS"):
         decode_image(b"P6\n99999 99999\n255\n" + b"\x00" * 16)

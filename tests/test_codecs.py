@@ -2,6 +2,7 @@
 mapInPandas wrappers (functions/multimodal.py)."""
 
 import struct
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -9,8 +10,10 @@ import pytest
 from graphina_spark.functions.codecs import (
     audio_stats,
     decode_bmp,
+    decode_jpeg,
     decode_ppm,
     decode_wav,
+    encode_jpeg,
     image_stats,
     resize_nearest,
     sniff_format,
@@ -53,6 +56,25 @@ def make_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
 
 
 IMG = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
+
+
+def test_jpeg_short_scan_rejected_before_allocating():
+    """An 8000x8000 three-component frame needs at least 2 bits per 8x8
+    block of each component (a DC size code and an EOB), 750 kB of scan:
+    a few scan bytes are rejected before ~1.5 GB of float64 planes are
+    allocated."""
+    blob = bytearray(encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8)))
+    i = bytes(blob).find(b"\xff\xc0")
+    assert i > 0 and blob[i + 9] == 3  # SOF0 with three components
+    blob[i + 5:i + 9] = struct.pack(">HH", 8000, 8000)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="truncated JPEG scan"):
+            decode_jpeg(bytes(blob))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
 
 
 def test_ppm_roundtrip_exact():

@@ -148,9 +148,11 @@ def test_superstep_plan_shape(spark, monkeypatch, case, size, threshold):
 
 
 def test_seeded_lpa_has_no_broadcast(spark, monkeypatch):
+    """The plain LPA shape, no broadcast: the seed frame is cached
+    partitioned by id, so the clamp join moves no seed row."""
     edges, n = _large()
     g = make_graph(spark, edges, n=n, directed=False)
     seen = _spy(monkeypatch, lpa_mod)
     seeds = g.vertices.where(F.col("id") < 5).withColumn("label", F.col("id"))
     lpa_mod.seeded_label_propagation(g, seeds, fixed_iters=STEADY + 1).count()
-    assert seen["broadcast"] == 0
+    assert seen == {"exchange": 2, "broadcast": 0}
