@@ -521,7 +521,7 @@ def _q_incremental_cc_web(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pagerank_uniform_web(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNWEIGHTED at-scale shard kernel: w_list is never stored — the
+    """The UNWEIGHTED shard gather: w_list is never stored — the
     gather computes w_norm = 1/degree on the fly (plans/shards.py uniform
     mode, auto-detected from the constant edge weight), cutting the
     per-superstep adjacency scan to 4 B/edge with compact=True.  This is
@@ -538,11 +538,8 @@ def _q_pagerank_uniform_web(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, salt_cap=50, dangling_sink=True, compact=True)
-    pr = pagerank(
-        gu, damping=0.85, fixed_iters=5, tol=None, shards=adj,
-        shards_min_edges=0,
-    )
+    adj = build_adj_shards(gu, salt_cap=50, compact=True)
+    pr = pagerank(gu, damping=0.85, fixed_iters=5, tol=None, shards=adj)
     return pr.select("id", F.round("rank", ROUND).alias("pr"))
 
 
@@ -640,20 +637,17 @@ def _q_incremental_sage_web(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pagerank_sharded_web(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The at-scale salted-CSR shard kernel itself (plans/shards.py gather
-    with dangling sink + sink-read actions), FORCED below the auto-select
-    crossover via shards_min_edges=0 — oracle identical to pagerank_web's
-    unrolled SQL, so the driver certifies the 100 TB execution path, not
-    just the plain-join fallback it delegates to at gate scale."""
+    """The shard gather over caller-built shards (plans/shards.py,
+    salt_cap=50, dangling sink + sink-read actions) — oracle identical to
+    pagerank_web's unrolled SQL, so the driver certifies shards a caller
+    builds and keeps as well as the ones pagerank_web's call builds
+    itself."""
     from graphina_spark.operators.pagerank import pagerank
     from graphina_spark.plans.shards import build_adj_shards
 
     g = _web(spark, sf_dir)
-    adj = build_adj_shards(g, salt_cap=50, dangling_sink=True)
-    pr = pagerank(
-        g, damping=0.85, fixed_iters=5, tol=None, shards=adj,
-        shards_min_edges=0,
-    )
+    adj = build_adj_shards(g, salt_cap=50)
+    pr = pagerank(g, damping=0.85, fixed_iters=5, tol=None, shards=adj)
     out = pr.select("id", F.round("rank", ROUND).alias("pr"))
     return out
 

@@ -97,7 +97,7 @@ def main() -> None:
 
     from graphina_spark.plans.shards import build_adj_shards
 
-    adj = build_adj_shards(web, dangling_sink=True)
+    adj = build_adj_shards(web)
     adj.shards.count()
     run(
         "pagerank_sharded_10it",

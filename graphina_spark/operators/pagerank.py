@@ -15,20 +15,25 @@ variant (personalized_pagerank.rs:24-120).  Pinned conventions:
 
 Spark execution model — one superstep shape, one exchange:
 
-- ``edges_norm(src, dst, w_norm)`` is precomputed once, hash-partitioned by
-  ``src`` into the shuffle-partition count and cached with that
-  partitioning; ``vinfo(id, p)`` likewise by ``id``;
+- the adjacency is the salted CSR shards of :mod:`graphina_spark.plans.shards`
+  (``AdjShards``), one row per (src, salt) with the scatter weights
+  ``w(u,v)/w_out(u)``; ``pagerank`` builds them when the caller passes none,
+  after its validation actions, and releases what that build cached on every
+  exit path.  ``vinfo(id, p)`` is cached hash-partitioned by ``id``;
 - the rank state is hash-partitioned by ``id`` (it is the output of the
-  ``vinfo`` join, materialized keeping its partitioning), so the
-  ``ranks.id = edges.src`` join is co-partitioned: a shuffled-hash join
-  that builds the ranks and moves no rank row;
-- gather = ``groupBy(dst).sum`` is the superstep's one exchange, with
-  partial (map-side) aggregation, so hub vertices receive pre-combined
-  messages, not one row per in-edge;
+  ``vinfo`` join, materialized keeping its partitioning), and unsalted shards
+  are partitioned by ``src`` into the same partition count, so the
+  ``ranks.id = shards.src`` join is co-partitioned: a shuffled-hash join that
+  builds the ranks and moves no rank row.  Salted shards (a src above
+  ``salt_cap``) first replicate each hub's rank once per salt, which costs
+  one more exchange;
+- gather = explode the joined CSR rows, then ``groupBy(dst).sum`` — the
+  superstep's one exchange, with partial (map-side) aggregation, so hub
+  vertices receive pre-combined messages, not one row per in-edge;
 - dangling mass rides the SAME message shuffle as the gather: every dangling
-  vertex gets one virtual edge to the sink id ``-1`` with weight 1, so
-  ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation group.  Vertex
-  id ``-1`` is reserved;
+  vertex has one shard row with a virtual edge to the sink id ``-1`` with
+  weight 1, so ``Σ_{dangling} pr[u]`` pops out as the sink's aggregation
+  group.  Vertex id ``-1`` is reserved;
 - the gathered frame is cached (by the loop, so it is released on every
   exit path), and the superstep's action collects its 1-row sink group as
   the dangling-mass scalar (a Python float); the new ranks are the cached
@@ -38,11 +43,6 @@ Spark execution model — one superstep shape, one exchange:
   supersteps with AQE and auto-broadcast off, so no join turns into a
   broadcast whatever the graph's size; ``tol`` is its stop on the L1
   delta (a co-partitioned join of the new and old ranks).
-
-At 100 TB scale the plain join is replaced by the salted CSR adjacency-shard
-gather in :mod:`graphina_spark.plans.shards` (same semantics, skew-proof;
-the shards must carry the sink rows, ``dangling_sink=True``); this module is
-the semantic reference implementation and the small/medium path.
 """
 
 from __future__ import annotations
@@ -53,12 +53,8 @@ from pyspark.sql import functions as F
 from graphina_spark.graph import LinkGraph
 from graphina_spark.plans.checkpoint import CheckpointManager
 from graphina_spark.plans.materialize import partitioned_cache
+from graphina_spark.plans.shards import AdjShards, build_adj_shards
 from graphina_spark.plans.superstep import run_supersteps
-
-# Symmetrized-edge count below which pagerank(shards=...) falls back to the
-# plain per-edge join (measured crossover region: shards lose at 57k edges,
-# win at 64.7M — see BENCH/BASELINE.md; 1M sits safely between).
-SHARDS_MIN_EDGES = 1_000_000
 
 
 def pagerank(
@@ -71,7 +67,7 @@ def pagerank(
     fixed_iters: int | None = None,
     checkpoint: CheckpointManager | None = None,
     resume: bool = False,
-    shards: "AdjShards | None" = None,
+    shards: AdjShards | None = None,
     shards_min_edges: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -83,42 +79,20 @@ def pagerank(
     ``(id, value)`` / ``(id, p)``.  Pass a dict as ``stats`` to receive
     ``{"iterations": k, "delta": last L1 delta}`` — the observability hook
     behind warm-start (incremental recrawl) convergence accounting.
-    ``shards`` must be built with ``dangling_sink=True`` (ValueError
-    otherwise).
+    ``shards`` are the caller's :func:`build_adj_shards` output, left
+    cached for reuse across calls; without them the call builds its own.
+    ``shards_min_edges`` is accepted and ignored: every call runs the shard
+    gather.
     """
     if not (0.0 < damping < 1.0):
         raise ValueError("damping must be in (0, 1)")  # personalized_pagerank.rs:41-45
     if fixed_iters is None and max_iter <= 0:
         raise ValueError("max_iter must be positive")  # personalized_pagerank.rs:46-50
-    if shards is not None and not shards.dangling_sink:
-        raise ValueError(
-            "pagerank needs shards built with dangling_sink=True: the "
-            "dangling mass is read from the sink group of the gather"
-        )
-
     spark = g.vertices.sparkSession
     n = g.num_vertices()
     if n == 0:
         return g.vertices.select(F.col("id"), F.lit(0.0).alias("rank"))
     n_iters = fixed_iters if fixed_iters is not None else max_iter
-
-    if shards is not None:
-        # Auto-select the superstep kernel by edge count: below the
-        # crossover the salted-CSR gather's fixed overhead (hub-salt
-        # replication join + explode) dominates and the plain per-edge join
-        # is faster (sf0.1 bench: 7.2 s sharded vs 4.3 s plain at 57k
-        # edges); above it the shard join moves ~|V| rows instead of ~|E|
-        # and wins (64.7M-edge scaling harness).  Values are identical
-        # either way (both paths are oracle-gated).  Pass
-        # ``shards_min_edges=0`` to force the shard kernel (tests,
-        # scaling harness at known scale).
-        threshold = (
-            SHARDS_MIN_EDGES if shards_min_edges is None else shards_min_edges
-        )
-        if threshold > 0:
-            n_edges = shards.wout.agg(F.sum("degree")).first()[0] or 0
-            if n_edges < threshold:
-                shards = None
 
     # teleport vector p: personalization L1-normalized (uniform fallback when
     # Σ<=0, personalized_pagerank.rs:51-63) else uniform 1/n
@@ -129,35 +103,6 @@ def pagerank(
             pcol = F.coalesce(F.col("p") / F.lit(psum), F.lit(0.0))
         else:
             personalization = None
-
-    # no Spark action between the caches below and run_supersteps, whose
-    # finally releases them
-    base = g.vertices.select("id")
-    if personalization is not None:
-        base = base.join(personalization, "id", "left")
-    vinfo = partitioned_cache(base.select("id", pcol.alias("p")).repartition("id"))
-    release = [vinfo]
-    if shards is None:
-        sym = g.symmetric_edges()
-        wout = sym.groupBy("src").agg(F.sum("weight").alias("w_out"))
-        # virtual sink edges: one (u, -1, 1.0) row per dangling vertex, so the
-        # dangling mass is just one more aggregation group in the gather
-        sink_edges = (
-            g.vertices.select(F.col("id").alias("src"))
-            .join(wout.select("src"), "src", "left_anti")
-            .select(
-                "src",
-                F.lit(-1).cast("long").alias("dst"),
-                F.lit(1.0).alias("w_norm"),
-            )
-        )
-        edges_norm = partitioned_cache(
-            sym.join(wout, "src")
-            .select("src", "dst", (F.col("weight") / F.col("w_out")).alias("w_norm"))
-            .unionByName(sink_edges)
-            .repartition("src")
-        )
-        release.append(edges_norm)
 
     def init() -> DataFrame:
         if nstart is None:
@@ -170,20 +115,7 @@ def pagerank(
         )
 
     def step(ranks: DataFrame, cache) -> DataFrame:
-        if shards is not None:
-            gathered = shards.gather(ranks, value="rank")
-        else:
-            gathered = (
-                edges_norm.alias("e")
-                .join(ranks.alias("r").hint("shuffle_hash"), F.col("r.id") == F.col("e.src"))
-                .select(
-                    F.col("e.dst").alias("id"),
-                    (F.col("r.rank") * F.col("e.w_norm")).alias("c"),
-                )
-                .groupBy("id")
-                .agg(F.sum("c").alias("gather"))
-            )
-        gathered = cache(gathered)
+        gathered = cache(adj.gather(ranks, value="rank"))
         # THE superstep action: runs the gather (and the ranks' deferred
         # materialization, unless a score or save ran it), fills the cache,
         # and returns the sink group — the dangling mass — as a float
@@ -207,13 +139,24 @@ def pagerank(
             .first()[0]
         )
 
-    ranks = run_supersteps(
-        spark, "pagerank", init, step, n_iters,
-        score=l1_delta if tol is not None and fixed_iters is None else None,
-        tol=tol or 0.0,
-        checkpoint=checkpoint, resume=resume, stats=stats,
-        release=release,
-    )
+    # built after every validation action; released on every exit path
+    adj = build_adj_shards(g) if shards is None else shards
+    try:
+        base = g.vertices.select("id")
+        if personalization is not None:
+            base = base.join(personalization, "id", "left")
+        vinfo = partitioned_cache(
+            base.select("id", pcol.alias("p")).repartition("id"))
+        ranks = run_supersteps(
+            spark, "pagerank", init, step, n_iters,
+            score=l1_delta if tol is not None and fixed_iters is None else None,
+            tol=tol or 0.0,
+            checkpoint=checkpoint, resume=resume, stats=stats,
+            release=[vinfo],
+        )
+    finally:
+        if shards is None:
+            adj.unpersist()
     return ranks.select("id", "rank")
 
 

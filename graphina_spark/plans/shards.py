@@ -35,18 +35,25 @@ points the in-memory version doesn't need:
    Message aggregation (``groupBy(dst).sum``) gets map-side partial
    aggregation from Spark, which defuses *in*-degree hubs symmetrically.
 
-Why shards beat the plain per-edge join at scale: the rank⋈adjacency join
-moves one row per (src, salt) — ~|V| rows — instead of one row per edge
-(~|E| = 10–100×|V|), and the edge fan-out happens *after* the join via
-``explode(arrays_zip(...))`` inside the same stage (whole-stage codegen,
-JVM-side, no Python).
+Every PageRank superstep gathers over these shards (``pagerank`` builds
+them when the caller passes none): the rank⋈adjacency join moves one row
+per (src, salt) — ~|V| rows — not one per edge (~|E| = 10–100×|V|), and
+the edge fan-out happens *after* the join via ``explode`` inside the same
+stage (whole-stage codegen, JVM-side, no Python).  Dangling vertices carry
+one virtual edge to the reserved sink id ``-1`` with weight 1, so the
+dangling mass rides the gather's shuffle as the sink's aggregation group.
+
+Spark matches cache entries by plan, so two builds over the same graph
+share them; a build releases only the frames it cached itself
+(``AdjShards.owned``), never an entry an earlier build made.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
@@ -67,17 +74,17 @@ class AdjShards:
     # vertices; _wlo/_whi are the per-src weight extrema behind the uniform
     # auto-detect
     salt_cap: int
-    dangling_sink: bool = True  # True: dangling vertices carry one virtual
-    # edge to id -1 w=1.0, so Σ dangling rank rides the gather shuffle as the
-    # sink's aggregation group (PageRank's dangling mass, no extra rank pass)
-    uniform: bool = False  # True: w_list is NOT stored — every edge of a
-    # src carries w_norm = 1/degree (auto-detected constant edge weight).
+    uniform: bool  # True: w_list is NOT stored — every edge of a src
+    # carries w_norm = 1/degree (auto-detected constant edge weight).
     # Cuts per-superstep adjacency scan traffic to 4 B/edge with compact=True
     # (vs 12 weighted-compact / 16 plain) — the memory-bus term that caps
     # single-box scaling; Common-Crawl link graphs are exactly this shape.
+    owned: list[DataFrame]  # the frames this build cached; the rest were
+    # already cached by an earlier build over the same graph, whose entries
+    # unpersist leaves in place
 
     def unpersist(self) -> None:
-        for df in (self.shards, self.salt_map, self.wout):
+        for df in self.owned:
             df.unpersist()
 
     def gather(self, ranks: DataFrame, value: str = "rank") -> DataFrame:
@@ -138,13 +145,9 @@ def build_adj_shards(
     compact: bool = False,
 ) -> AdjShards:
     """Group the (symmetrized) edge set into capped, salted CSR rows whose
-    w_list holds the PageRank scatter weights w(u,v)/w_out(u).
-
-    ``dangling_sink=True`` (what :func:`pagerank` requires) additionally
-    emits one shard row per dangling vertex (no out-edges): ``(src=u,
-    salt=0, dst_list=[-1], w_list=[1.0])``.  A PageRank gather then produces
-    the total dangling mass as the sink id's aggregation group inside the
-    normal message shuffle.  ``wout`` is NOT given sink rows.
+    w_list holds the PageRank scatter weights w(u,v)/w_out(u), plus one
+    sink row per dangling vertex (no out-edges): ``(src=u, salt=0,
+    dst_list=[-1], w_list=[1.0])``.  ``wout`` is NOT given sink rows.
 
     Constant edge weights are auto-detected from per-src weight extrema
     folded into the wout aggregation (no extra edge scan; one tiny reduce
@@ -161,25 +164,62 @@ def build_adj_shards(
     identical row counts (every superstep re-reads the whole cached
     adjacency, so this is the memory-bus term that caps single-box scaling
     at high core counts; on a real cluster it is the network/cache term).
-    Requires vertex ids < 2³¹ (validated).  Ids stay EXACT (integers);
-    only w_norm is rounded to float32 — per-superstep relative rank error
-    ≤ 2⁻²³ ≈ 1.2e-7, and because the PageRank iteration is a contraction
-    with factor d the steady-state error is bounded by 1.2e-7/(1−d) ≈
-    8e-7 < the north rule's allclose 1e-6 (tests pin agreement ≤ 1e-6
-    against the float64 kernel).
+    Requires vertex ids < 2³¹ (validated before anything is cached).  Ids
+    stay EXACT (integers); only w_norm is rounded to float32 — per-superstep
+    relative rank error ≤ 2⁻²³ ≈ 1.2e-7, and because the PageRank iteration
+    is a contraction with factor d the steady-state error is bounded by
+    1.2e-7/(1−d) ≈ 8e-7 < the north rule's allclose 1e-6 (tests pin
+    agreement ≤ 1e-6 against the float64 reference).
+
+    A build that raises releases what it cached.
     """
+    if not dangling_sink:  # the keyword stays accepted for older callers
+        raise ValueError("dangling_sink=False is not supported: the shards "
+                         "always carry the sink rows")
+    if compact and g.vertices.where(
+        (F.col("id") >= 2_147_483_648) | (F.col("id") < 0)
+    ).limit(1).count():
+        raise ValueError(
+            "build_adj_shards(compact=True) requires vertex ids in "
+            "[0, 2^31); use compact=False for wider id spaces"
+        )
+    owned: list[DataFrame] = []
+    try:
+        return _build(g, salt_cap, compact, owned)
+    except BaseException:
+        for df in owned:
+            df.unpersist()
+        raise
+
+
+def _cache_new(
+    df: DataFrame, owned: list[DataFrame], partitioned: bool = False
+) -> DataFrame:
+    """``df`` cached (by ``partitioned_cache`` when ``partitioned``) and
+    recorded in ``owned``, unless the cache manager already holds an entry
+    for ``df``'s plan: ``df`` then reads that entry, which stays its maker's
+    to release."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    owned.append(partitioned_cache(df) if partitioned else df.cache())
+    return owned[-1]
+
+
+def _build(
+    g: LinkGraph, salt_cap: int, compact: bool, owned: list[DataFrame]
+) -> AdjShards:
     spark = g.edges.sparkSession
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = g.symmetric_edges()
     # per-src weight extrema piggyback on the wout aggregation, so the
     # constant-weight auto-detect folds into the edge pass that
     # materializes the wout cache anyway — no extra scan of sym
-    wout = sym.groupBy("src").agg(
+    wout = _cache_new(sym.groupBy("src").agg(
         F.sum("weight").alias("w_out"),
         F.count("*").alias("degree"),
         F.min("weight").alias("_wlo"),
         F.max("weight").alias("_whi"),
-    ).cache()
+    ), owned)
     # constant edge weight => w_norm is exactly 1/degree, so w_list need
     # not be stored or scanned; no src above salt_cap => no salt rows
     mm = wout.agg(
@@ -188,7 +228,6 @@ def build_adj_shards(
     ).first()
     uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
     salted = mm["dmax"] is not None and mm["dmax"] > salt_cap
-    from pyspark.sql import Window
 
     rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
     e = (
@@ -205,52 +244,39 @@ def build_adj_shards(
         .drop("weight")
     )
     dst_t, w_t = ("int", "float") if compact else ("bigint", "double")
-    if compact:
-        over = g.vertices.where(
-            (F.col("id") >= 2_147_483_648) | (F.col("id") < 0)
-        ).limit(1).count()
-        if over:
-            raise ValueError(
-                "build_adj_shards(compact=True) requires vertex ids in "
-                "[0, 2^31); use compact=False for wider id spaces"
-            )
     aggs = [
         F.collect_list(F.col("dst").cast(dst_t)).alias("dst_list"),
         F.first("degree").alias("degree"),
         F.first("w_out").alias("w_out"),
     ]
+    sink_cols = [
+        F.col("src"),
+        F.lit(0).cast("int").alias("salt"),
+        F.array(F.lit(-1).cast(dst_t)).alias("dst_list"),
+        F.lit(0).cast("long").alias("degree"),
+        F.lit(0.0).alias("w_out"),
+    ]
     if not uniform:
         aggs.insert(
             1, F.collect_list(F.col("w_norm").cast(w_t)).alias("w_list")
         )
-    grouped = e.groupBy("src", "salt").agg(*aggs)
-    if dangling_sink:
-        sink_cols = [
-            F.col("src"),
-            F.lit(0).cast("int").alias("salt"),
-            F.array(F.lit(-1).cast(dst_t)).alias("dst_list"),
-            F.lit(0).cast("long").alias("degree"),
-            F.lit(0.0).alias("w_out"),
-        ]
-        if not uniform:
-            sink_cols.insert(
-                3, F.array(F.lit(1.0).cast(w_t)).alias("w_list")
-            )
-        sink_rows = (
-            g.vertices.select(F.col("id").alias("src"))
-            .join(wout.select("src"), "src", "left_anti")
-            .select(*sink_cols)
-        )
-        grouped = grouped.unionByName(sink_rows)
-    keys = ["src", "salt"] if salted else ["src"]
-    shards = partitioned_cache(
-        grouped.withColumn("bucket", F.pmod(F.hash("src"), F.lit(n_buckets)))
-        .repartition(n_buckets, *keys)
+        sink_cols.insert(3, F.array(F.lit(1.0).cast(w_t)).alias("w_list"))
+    sink_rows = (
+        g.vertices.select(F.col("id").alias("src"))
+        .join(wout.select("src"), "src", "left_anti")
+        .select(*sink_cols)
     )
-    salt_map = (
+    grouped = e.groupBy("src", "salt").agg(*aggs).unionByName(sink_rows)
+    keys = ["src", "salt"] if salted else ["src"]
+    shards = _cache_new(
+        grouped.withColumn("bucket", F.pmod(F.hash("src"), F.lit(n_buckets)))
+        .repartition(n_buckets, *keys),
+        owned, partitioned=True,
+    )
+    salt_map = _cache_new(
         wout.where(F.col("degree") > salt_cap)
-        .select("src", F.ceil(F.col("degree") / F.lit(salt_cap)).cast("int").alias("n_salt"))
-        .cache()
+        .select("src", F.ceil(F.col("degree") / F.lit(salt_cap)).cast("int").alias("n_salt")),
+        owned,
     )
     return AdjShards(
         shards=shards,
@@ -258,6 +284,6 @@ def build_adj_shards(
         salted=salted,
         wout=wout,
         salt_cap=salt_cap,
-        dangling_sink=dangling_sink,
         uniform=uniform,
+        owned=owned,
     )

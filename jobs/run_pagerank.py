@@ -41,7 +41,6 @@ def main() -> None:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--undirected", action="store_true")
     ap.add_argument("--salt-cap", type=int, default=100_000)
-    ap.add_argument("--no-shards", action="store_true", help="plain per-edge join path")
     ap.add_argument(
         "--compact", action="store_true",
         help="int32/float32 shard arrays (ids < 2^31; rank error "
@@ -87,12 +86,7 @@ def main() -> None:
             },
         )
 
-    adj = (
-        None
-        if a.no_shards
-        else build_adj_shards(g, salt_cap=a.salt_cap, dangling_sink=True,
-                              compact=a.compact)
-    )
+    adj = build_adj_shards(g, salt_cap=a.salt_cap, compact=a.compact)
     t0 = time.time()
     pr = pagerank(
         g,

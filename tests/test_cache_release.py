@@ -2,11 +2,13 @@
 session's cache manager is as empty after the call as before it."""
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.errors import NumberFormatException
 from pyspark.sql import functions as F
 
 from conftest import make_graph
 
+import graphina_spark.plans.shards as shards_mod
 from graphina_spark.operators.components import connected_components
 from graphina_spark.operators.lpa import label_propagation, seeded_label_propagation
 from graphina_spark.operators.pagerank import pagerank
@@ -29,9 +31,11 @@ KERNELS = {
     "seeded_lpa": lambda g, adj, ck, st: seeded_label_propagation(
         g, g.vertices.where(F.col("id") < 2).withColumn("label", F.col("id")),
         fixed_iters=2),
-    "pagerank_plain": lambda g, adj, ck, st: pagerank(g, fixed_iters=3, tol=None),
+    # the kernel builds its own shards
+    "pagerank_default": lambda g, adj, ck, st: pagerank(g, fixed_iters=3, tol=None),
+    # the caller's shards
     "pagerank_shards": lambda g, adj, ck, st: pagerank(
-        g, fixed_iters=3, tol=None, shards=adj, shards_min_edges=0),
+        g, fixed_iters=3, tol=None, shards=adj),
     "pagerank_checkpoint": lambda g, adj, ck, st: pagerank(
         g, fixed_iters=3, tol=None, checkpoint=ck),
     "pagerank_tol_early_exit": lambda g, adj, ck, st: pagerank(
@@ -63,7 +67,7 @@ def test_kernel_leaves_cache_manager_empty(spark, tmp_path, kernel):
 # kernel name -> (call(g) that raises after the kernel cached its frames,
 # the exception it raises)
 RAISING = {
-    # nstart is validated after vinfo/edges_norm are cached
+    # nstart is validated after the shards and vinfo are cached
     "pagerank_nstart_zero": (lambda g: pagerank(
         g, nstart=g.vertices.select("id", F.lit(0.0).alias("value"))), ValueError),
     # a non-numeric seed label fails its cast when the seed frame is cached
@@ -83,27 +87,74 @@ def test_raising_kernel_leaves_cache_manager_empty(spark, kernel):
     assert _cache_empty(spark)
 
 
-@pytest.mark.parametrize("path", ["plain", "shards"])
-def test_raising_sink_read_leaves_cache_manager_empty(spark, monkeypatch, path):
-    """A PageRank step caches its gather, then reads the sink group: when
-    that read raises, the gather it just cached is released too."""
+@pytest.mark.parametrize("via", ["build", "pagerank"])
+def test_raising_build_leaves_cache_manager_empty(spark, monkeypatch, via):
+    """A shard build that raises after it cached ``wout`` releases it, also
+    when ``pagerank`` started the build."""
     g = make_graph(spark, EDGES, n=7, directed=True)
     spark.catalog.clearCache()
-    adj = build_adj_shards(g) if path == "shards" else None
+
+    def fail(df):
+        raise RuntimeError("shard cache failed")
+
+    monkeypatch.setattr(shards_mod, "partitioned_cache", fail)
+    with pytest.raises(RuntimeError, match="shard cache failed"):
+        if via == "build":
+            build_adj_shards(g)
+        else:
+            pagerank(g, fixed_iters=3, tol=None)
+    assert _cache_empty(spark)
+
+
+def test_compact_id_check_caches_nothing(spark):
+    g = make_graph(spark, [(0, 1)], n=2, directed=True)
+    g.vertices = spark.createDataFrame([(0,), (2**31 + 5,)], "id long")
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="2\\^31"):
+        build_adj_shards(g, compact=True)
+    assert _cache_empty(spark)
+
+
+@pytest.mark.parametrize("salt_cap", [100_000, 2], ids=["same_plan", "other_salt_cap"])
+def test_kernel_build_keeps_caller_shard_cache(spark, salt_cap):
+    """Spark matches cache entries by plan, so the shards ``pagerank``
+    builds share the entries of a caller's build over the same graph; the
+    kernel releases only the frames it cached itself."""
+    g = make_graph(spark, EDGES, n=7, directed=True)
+    spark.catalog.clearCache()
+    adj = build_adj_shards(g, salt_cap=salt_cap)
+    out = pagerank(g, fixed_iters=3, tol=None)
+    for df in (adj.shards, adj.salt_map, adj.wout):
+        assert df.storageLevel != StorageLevel.NONE
+    adj.unpersist()
+    assert _cache_empty(spark)
+    assert out.count() == 7
+
+
+@pytest.mark.parametrize("shards", ["kernel", "caller"])
+def test_raising_sink_read_leaves_cache_manager_empty(spark, monkeypatch, shards):
+    """A PageRank step caches its gather, then reads the sink group: when
+    that read raises, the gather it just cached is released too, and so
+    are the shards the kernel built."""
+    g = make_graph(spark, EDGES, n=7, directed=True)
+    spark.catalog.clearCache()
+    adj = build_adj_shards(g) if shards == "caller" else None
+    sc = spark.sparkContext
     cls = type(g.vertices)
     real = cls.collect
     raised = []
 
     def collect(self):
-        # the step's action is the first collect after the set-up
-        if not raised:
+        # the step's action is the first collect of superstep 0; the shard
+        # build's probe (a first()) runs before it, under no description
+        if not raised and sc.getLocalProperty("spark.job.description") == "pagerank:0":
             raised.append(1)
             raise RuntimeError("sink read failed")
         return real(self)
 
     monkeypatch.setattr(cls, "collect", collect)
     with pytest.raises(RuntimeError, match="sink read failed"):
-        pagerank(g, fixed_iters=3, tol=None, shards=adj, shards_min_edges=0)
+        pagerank(g, fixed_iters=3, tol=None, shards=adj)
     monkeypatch.undo()
     assert raised
     if adj is not None:

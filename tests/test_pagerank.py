@@ -123,9 +123,9 @@ SUPERSTEP_GRAPHS = {
 
 @pytest.mark.parametrize("stop", ["fixed_iters", "tol"])
 @pytest.mark.parametrize("ckpt", [False, True], ids=["no_ckpt", "ckpt"])
-@pytest.mark.parametrize("path", ["plain", "shards"])
+@pytest.mark.parametrize("shards", ["kernel", "caller"])
 @pytest.mark.parametrize("graph", sorted(SUPERSTEP_GRAPHS))
-def test_superstep_matches_reference(spark, tmp_path, graph, path, ckpt, stop):
+def test_superstep_matches_reference(spark, tmp_path, graph, shards, ckpt, stop):
     from graphina_spark.plans.checkpoint import CheckpointManager
     from graphina_spark.plans.shards import build_adj_shards
 
@@ -136,9 +136,10 @@ def test_superstep_matches_reference(spark, tmp_path, graph, path, ckpt, stop):
     kw.update({"fixed_iters": 6, "tol": None} if stop == "fixed_iters"
               else {"tol": 1e-6, "max_iter": 200})
     exp = ref_pagerank(5, edges, weights, **kw)
-    adj = build_adj_shards(g, salt_cap=2) if path == "shards" else None
+    # the caller's shards are salted (salt_cap=2), the kernel's are not
+    adj = build_adj_shards(g, salt_cap=2) if shards == "caller" else None
     if adj is not None:
-        kw.update(shards=adj, shards_min_edges=0)
+        kw["shards"] = adj
     if ckpt:
         kw["checkpoint"] = CheckpointManager(str(tmp_path), "pr", {"d": 0.3})
     stats: dict = {}

@@ -1,5 +1,5 @@
-"""Salted CSR adjacency shards: structure invariants + PageRank equivalence
-between the per-edge join path and the sharded gather path."""
+"""Salted CSR adjacency shards: structure invariants + PageRank over the
+sharded gather against the pure-Python reference."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,10 +8,26 @@ from graphina_spark.operators.pagerank import pagerank
 from graphina_spark.plans.shards import build_adj_shards
 from graphina_spark.sources.derived import web_graph
 from tests.conftest import make_graph
+from tests.reference_impl import ref_pagerank
 
 
 def _pr_map(df):
     return {r["id"]: r["rank"] for r in df.collect()}
+
+
+def _ref_map(g, **kw):
+    """``ref_pagerank`` over ``g``'s collected edges, keyed by vertex id."""
+    ids = sorted(r["id"] for r in g.vertices.collect())
+    pos = {v: i for i, v in enumerate(ids)}
+    rows = g.edges.collect()
+    ranks = ref_pagerank(
+        len(ids),
+        [(pos[r["src"]], pos[r["dst"]]) for r in rows],
+        [r["weight"] for r in rows],
+        directed=g.directed,
+        **kw,
+    )
+    return dict(zip(ids, ranks))
 
 
 def test_shard_rows_capped_and_complete(spark, sf_dir):
@@ -46,26 +62,11 @@ def test_shard_rows_capped_and_complete(spark, sf_dir):
 
 def test_sharded_pagerank_matches_plain(spark, sf_dir):
     g = web_graph(spark, sf_dir)
-    plain = _pr_map(pagerank(g, fixed_iters=5, tol=None))
+    ref = _ref_map(g, fixed_iters=5)
     adj = build_adj_shards(g, salt_cap=3)  # force heavy salting
-    sharded = _pr_map(pagerank(g, fixed_iters=5, tol=None, shards=adj, shards_min_edges=0))
-    assert plain.keys() == sharded.keys()
-    assert all(abs(plain[k] - sharded[k]) < 1e-9 for k in plain)
-    adj.unpersist()
-
-
-def test_shards_auto_select_falls_back_below_threshold(spark, sf_dir):
-    # default shards_min_edges (1M) >> the sf0.001 edge count: pagerank
-    # silently takes the plain per-edge join and values are identical to
-    # the forced shard kernel (both paths are value-gated)
-    g = web_graph(spark, sf_dir)
-    adj = build_adj_shards(g, dangling_sink=True)
-    auto = _pr_map(pagerank(g, fixed_iters=5, tol=None, shards=adj))
-    forced = _pr_map(
-        pagerank(g, fixed_iters=5, tol=None, shards=adj, shards_min_edges=0)
-    )
-    assert auto.keys() == forced.keys()
-    assert all(abs(auto[k] - forced[k]) < 1e-9 for k in auto)
+    sharded = _pr_map(pagerank(g, fixed_iters=5, tol=None, shards=adj))
+    assert ref.keys() == sharded.keys()
+    assert all(abs(ref[k] - sharded[k]) < 1e-9 for k in ref)
     adj.unpersist()
 
 
@@ -77,10 +78,10 @@ def test_sharded_pagerank_undirected_weighted(spark):
         directed=False,
         weights=[1.0, 2.0, 0.5, 4.0, 1.0],
     )
-    plain = _pr_map(pagerank(g, fixed_iters=8, tol=None))
+    ref = _ref_map(g, fixed_iters=8)
     adj = build_adj_shards(g, salt_cap=2)
-    sharded = _pr_map(pagerank(g, fixed_iters=8, tol=None, shards=adj, shards_min_edges=0))
-    assert all(abs(plain[k] - sharded[k]) < 1e-12 for k in plain)
+    sharded = _pr_map(pagerank(g, fixed_iters=8, tol=None, shards=adj))
+    assert all(abs(ref[k] - sharded[k]) < 1e-12 for k in ref)
     assert abs(sum(sharded.values()) - 1.0) < 1e-9
     adj.unpersist()
 
@@ -88,7 +89,7 @@ def test_sharded_pagerank_undirected_weighted(spark):
 def test_convergence_with_shards(spark, sf_dir):
     g = web_graph(spark, sf_dir)
     adj = build_adj_shards(g)
-    pr = pagerank(g, tol=1e-8, max_iter=200, shards=adj, shards_min_edges=0)
+    pr = pagerank(g, tol=1e-8, max_iter=200, shards=adj)
     total = pr.agg(F.sum("rank")).first()[0]
     assert total == pytest.approx(1.0, abs=1e-6)
     adj.unpersist()
@@ -97,13 +98,12 @@ def test_convergence_with_shards(spark, sf_dir):
 def test_dangling_sink_shards_match_plain(spark):
     # 3 and 4 are dangling (no out-edges); 2→3, 0→4 feed them rank mass
     g = make_graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], n=5)
-    plain = _pr_map(pagerank(g, fixed_iters=10, tol=None))
+    ref = _ref_map(g, fixed_iters=10)
     sink = build_adj_shards(g, salt_cap=2)
-    assert sink.dangling_sink
-    pr_sink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=sink, shards_min_edges=0))
+    pr_sink = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=sink))
     # sink id -1 never leaks into results
-    assert set(pr_sink) == set(plain) and -1 not in pr_sink
-    assert all(abs(plain[k] - pr_sink[k]) < 1e-12 for k in plain)
+    assert set(pr_sink) == set(ref) and -1 not in pr_sink
+    assert all(abs(ref[k] - pr_sink[k]) < 1e-12 for k in ref)
     assert abs(sum(pr_sink.values()) - 1.0) < 1e-9
     # sink shard rows exist exactly for the dangling vertices
     sink_rows = sink.shards.where(F.col("w_out") == 0.0).collect()
@@ -114,28 +114,26 @@ def test_dangling_sink_shards_match_plain(spark):
     sink.unpersist()
 
 
-def test_pagerank_rejects_shards_without_sink(spark):
+def test_build_rejects_shards_without_sink(spark):
+    # the sink rows carry PageRank's dangling mass, so they are always built
     g = make_graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (0, 4)], n=5)
-    nosink = build_adj_shards(g, salt_cap=2, dangling_sink=False)
-    assert nosink.shards.where(F.col("w_out") == 0.0).count() == 0
-    with pytest.raises(ValueError, match="dangling_sink=True"):
-        pagerank(g, fixed_iters=10, tol=None, shards=nosink, shards_min_edges=0)
-    nosink.unpersist()
+    with pytest.raises(ValueError, match="dangling_sink=False"):
+        build_adj_shards(g, salt_cap=2, dangling_sink=False)
 
 
 def test_compact_shards_match_f64_within_contract(spark, sf_dir):
     # int32 dst / float32 w_norm layout: ids exact, ranks within the north
-    # rule's allclose 1e-6 of the float64 kernel (error bound 2^-23/(1-d))
+    # rule's allclose 1e-6 of the float64 reference (error bound 2^-23/(1-d))
     g = web_graph(spark, sf_dir)
-    cp = build_adj_shards(g, salt_cap=3, dangling_sink=True, compact=True)
+    cp = build_adj_shards(g, salt_cap=3, compact=True)
     assert dict(cp.shards.dtypes)["dst_list"] == "array<int>"
     assert dict(cp.shards.dtypes)["w_list"] == "array<float>"
-    plain = _pr_map(pagerank(g, fixed_iters=10, tol=None))
+    ref = _ref_map(g, fixed_iters=10)
     compact = _pr_map(
-        pagerank(g, fixed_iters=10, tol=None, shards=cp, shards_min_edges=0)
+        pagerank(g, fixed_iters=10, tol=None, shards=cp)
     )
-    assert plain.keys() == compact.keys()
-    assert all(abs(plain[k] - compact[k]) < 1e-6 for k in plain)
+    assert ref.keys() == compact.keys()
+    assert all(abs(ref[k] - compact[k]) < 1e-6 for k in ref)
     cp.unpersist()
 
 
@@ -160,8 +158,8 @@ def test_compact_shards_accept_int32_max_id(spark):
 
 def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
     # unit-weight projection: auto-detect drops w_list (4 B/edge compact
-    # scan) and the computed 1/degree gather matches the plain float64
-    # kernel to ~1 ulp (far inside the 1e-6 contract)
+    # scan) and the computed 1/degree gather matches the float64
+    # reference to ~1 ulp (far inside the 1e-6 contract)
     from graphina_spark.graph import LinkGraph
 
     g = web_graph(spark, sf_dir)
@@ -170,20 +168,20 @@ def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, dangling_sink=True, compact=True)
+    adj = build_adj_shards(gu, compact=True)
     assert adj.uniform is True
     assert "w_list" not in adj.shards.columns
-    plain = _pr_map(pagerank(gu, fixed_iters=5, tol=None))
+    ref = _ref_map(gu, fixed_iters=5)
     sharded = _pr_map(
-        pagerank(gu, fixed_iters=5, tol=None, shards=adj, shards_min_edges=0)
+        pagerank(gu, fixed_iters=5, tol=None, shards=adj)
     )
-    assert plain.keys() == sharded.keys()
-    assert all(abs(plain[k] - sharded[k]) < 1e-12 for k in plain)
+    assert ref.keys() == sharded.keys()
+    assert all(abs(ref[k] - sharded[k]) < 1e-12 for k in ref)
     adj.unpersist()
 
 
 def test_uniform_shards_not_detected_on_weighted(spark, sf_dir):
     g = web_graph(spark, sf_dir)  # weights 1..5
-    adj = build_adj_shards(g, dangling_sink=True)
+    adj = build_adj_shards(g)
     assert adj.uniform is False and "w_list" in adj.shards.columns
     adj.unpersist()

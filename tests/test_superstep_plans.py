@@ -5,7 +5,7 @@ the input size and the session's broadcast threshold.
 A superstep's plan is the plan of the state its step returns plus the
 plans of the frames the step itself cached or materialized (PageRank's
 gather, CC's labels before the pointer jump).  Frames cached before the
-loop (shards, ``edges_norm``, ``vinfo``, ``sym``) are built once, so their
+loop (shards, ``vinfo``, ``sym``) are built once, so their
 subtrees are skipped.  The counts are read inside the
 loop, where its conf pins hold."""
 
@@ -106,16 +106,17 @@ def _spy(monkeypatch, module):
 CASES = {
     # name -> (module, call(g) -> frame, shards salt_cap or None, shape)
     "pagerank_shards": (pagerank_mod, lambda g, adj: pagerank_mod.pagerank(
-        g, fixed_iters=STEADY + 1, tol=None, shards=adj, shards_min_edges=0),
+        g, fixed_iters=STEADY + 1, tol=None, shards=adj),
         100_000, {"exchange": 1, "broadcast": 0}),
-    "pagerank_plain": (pagerank_mod, lambda g, adj: pagerank_mod.pagerank(
+    # the shards the kernel builds when the caller passes none
+    "pagerank_default": (pagerank_mod, lambda g, adj: pagerank_mod.pagerank(
         g, fixed_iters=STEADY + 1, tol=None),
         None, {"exchange": 1, "broadcast": 0}),
     # the salted path replicates hub ranks per salt: the replicated rank
     # frame re-shuffles onto the (src, salt) shards, and salt_map is the
     # one, explicit, broadcast
     "pagerank_salted": (pagerank_mod, lambda g, adj: pagerank_mod.pagerank(
-        g, fixed_iters=STEADY + 1, tol=None, shards=adj, shards_min_edges=0),
+        g, fixed_iters=STEADY + 1, tol=None, shards=adj),
         2, {"exchange": 2, "broadcast": 1}),
     "lpa": (lpa_mod, lambda g, adj: lpa_mod.label_propagation(g, fixed_iters=STEADY + 1),
             None, {"exchange": 2, "broadcast": 0}),
