@@ -22,57 +22,29 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assign_dense_ids(
-    df: DataFrame, key: str = "url", num_partitions: int | None = None
-) -> DataFrame:
+def assign_dense_ids(df: DataFrame, key: str = "url") -> DataFrame:
     """(key) → (id, key): dense 0-based ids equal to the global sort rank of
-    ``key`` — deterministic and scalable.
+    the distinct ``key`` values — deterministic and scalable.
 
-    A single global ``row_number`` window would funnel every row through one
-    task; instead: range-partition by key (ranges are ordered), rank within
-    each partition (parallel windows keyed by partition id), then add
-    broadcast per-partition offsets.  The result is independent of the range
-    boundaries the sampler picks, so ids are reproducible across runs and
-    cluster sizes (reference analogue: the attribute-keyed node dedupe +
-    stable id map, /root/reference/src/core/io.rs:113-118,
+    The rank is the exclusive global prefix sum of a column of ones over the
+    sorted distinct keys (plans/ordered.py::global_cumsum, the two-pass
+    range-partitioned prefix; no single-task global window), so ids are
+    reproducible across runs and cluster sizes (reference analogue: the
+    attribute-keyed node dedupe + stable id map, src/core/io.rs:113-118 and
     pygraphina/src/core/id_map.rs).
-
-    ``parted`` is materialized ONCE (eager localCheckpoint) before the counts
-    job: ``repartitionByRange``'s reservoir sampling is nondeterministic
-    across actions, so without pinning the partitioning the offsets job and
-    later downstream jobs could see *different* range boundaries, misaligning
-    the broadcast offsets and silently corrupting ids.  Boundary-independence
-    of the final ranks only holds when every job reads the same partitioning.
     """
-    from graphina_spark.plans.materialize import local_materialize as _mat
+    from graphina_spark.plans.ordered import global_cumsum
 
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parted = (
-        df.select(key)
-        .distinct()
-        .repartitionByRange(p, F.col(key))
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(_mat)
-    )
-    counts = parted.groupBy("_pid").count().collect()
-    offsets, acc = {}, 0
-    for r in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    off_df = spark.createDataFrame(
-        [(k, v) for k, v in offsets.items()], "_pid int, _off long"
-    )
-    w = Window.partitionBy("_pid").orderBy(key)
-    return (
-        parted.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .select((F.col("_off") + F.col("_rn") - 1).alias("id"), key)
-    )
+    return global_cumsum(
+        df.select(key).distinct().withColumn("_one", F.lit(1)),
+        [key],
+        "_one",
+        out_col="id",
+    ).select("id", key)
 
 
 @dataclass
@@ -120,9 +92,9 @@ class LinkGraph:
         Full ingestion path: vectorized link parsing (functions/extract.py)
         → url→id assignment → vertex/edge tables.  Vertex identity is the
         business key (url), exactly like the reference's attribute-keyed node
-        dedupe in read_edge_list (io.rs:113-118); ids are deterministic
-        ``row_number() - 1`` over sorted distinct urls so runs are reproducible
-        (no monotonically_increasing_id).
+        dedupe in read_edge_list (io.rs:113-118); ids are the deterministic
+        0-based sort rank of the distinct urls (``assign_dense_ids``) so runs
+        are reproducible (no monotonically_increasing_id).
         """
         from graphina_spark.functions.extract import parse_links_udf
         from graphina_spark.plans.materialize import local_materialize as _mat

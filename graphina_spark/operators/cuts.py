@@ -29,7 +29,7 @@ conductance in habedi/graphina); DuckDB twin: oracles.py::conductance_web_sql.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphina_spark.graph import LinkGraph
@@ -96,17 +96,16 @@ def sweep_cut(g: LinkGraph, scores: DataFrame, score_col: str = "score") -> Data
     Scale shape: NO per-prefix work.  Each undirected edge (ranks r1 < r2)
     is cut by exactly the prefixes r1 <= t < r2, so the cut profile is the
     running sum of +1@r1 / -1@r2 deltas and the volume profile is the
-    running sum of degrees — both global ordered prefix sums via the
-    two-pass range-partition pattern (plans/ordered.py): rank assignment =
-    one pass, the dual (volume, cut) cumsum = one more pass over the SAME
-    range partitioning (both windows share one sort), plus the edge-rank
-    join.  Driver state is O(#partitions) offsets; the argmin is a
-    TakeOrdered(1).  DuckDB twin: oracles.py::sweep_cut_block_sql.
+    running sum of degrees — both global ordered prefix sums
+    (plans/ordered.py::global_cumsum): rank assignment = one call, the
+    (volume, cut) profiles = one more call over both columns (one range
+    partitioning, one window), plus the edge-rank join.  Driver state is
+    O(#partitions) offsets; the argmin is a TakeOrdered(1).  DuckDB twin:
+    oracles.py::sweep_cut_block_sql.
     """
     from graphina_spark.plans.materialize import local_materialize as _mat
     from graphina_spark.plans.ordered import global_cumsum
 
-    spark = g.vertices.sparkSession
     sc = scores.select("id", F.col(score_col).alias("_score"))
     ranks = (
         global_cumsum(
@@ -149,38 +148,13 @@ def sweep_cut(g: LinkGraph, scores: DataFrame, score_col: str = "score") -> Data
         )
     )
 
-    # dual INCLUSIVE global cumsum over rank in one range-partitioned pass
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    parted = (
-        rv.repartitionByRange(p, F.col("rank"))
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(_mat)
-    )
-    sums = parted.groupBy("_pid").agg(
-        F.sum("deg").alias("sd"), F.sum("dlt").alias("sc")
-    ).collect()
-    offs, ad, ac = {}, 0, 0
-    for r in sorted(sums, key=lambda r: r["_pid"]):
-        offs[r["_pid"]] = (ad, ac)
-        ad += r["sd"] or 0
-        ac += r["sc"] or 0
-    off = spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in offs.items()], "_pid int, _od long, _oc long"
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    pre = (
-        parted.withColumn("_ld", F.sum("deg").over(w))
-        .withColumn("_lc", F.sum("dlt").over(w))
-        .join(F.broadcast(off), "_pid")
-        .select(
-            "rank",
-            (F.col("_od") + F.col("_ld")).alias("vol"),
-            (F.col("_oc") + F.col("_lc")).alias("cut"),
-        )
+    # inclusive (volume, cut) profiles: both exclusive prefixes in one
+    # global_cumsum (one range partitioning, one offsets job, one window),
+    # plus the row's own value
+    pre = global_cumsum(rv, ["rank"], ["deg", "dlt"], out_col=["_pd", "_pc"]).select(
+        "rank",
+        (F.col("_pd") + F.col("deg")).alias("vol"),
+        (F.col("_pc") + F.col("dlt")).alias("cut"),
     )
     m2 = pre.agg(F.max("vol").alias("m2"))
     best = (

@@ -229,9 +229,9 @@ def multilevel_partition(
     # (a pair matching emits mostly-even group ids), and rounds only bound
     # inflow — they never evict.  Round-robin over the dense rank of
     # (nw desc, id asc) interleaves heavy and light groups, so every part
-    # starts within a couple of fine vertices of n/k.  The rank reuses the
-    # scalable range-partition machinery of assign_dense_ids via a composite
-    # key (nw ∈ {1,2} ⇒ key = (2-nw)·m + id orders exactly like
+    # starts within a couple of fine vertices of n/k.  The rank is
+    # assign_dense_ids (the two-pass prefix sum of plans/ordered.py) over a
+    # composite key (nw ∈ {1,2} ⇒ key = (2-nw)·m + id orders exactly like
     # (nw desc, id asc)); no single-task global window.
     from graphina_spark.graph import assign_dense_ids
 

@@ -26,8 +26,8 @@ Spark formulation — reuse the two gated kernels instead of inventing one:
    (well-defined because edges partition);
 4. unpack each labeled edge into its two endpoints → (id, community) rows.
 
-Packing assumes dense vertex ids < 2^32 (graph.assign_dense_ids row_numbers
-from 0, so this holds up to 4.29 B vertices — beyond it, swap the packed
+Packing assumes dense vertex ids < 2^32 (graph.assign_dense_ids ranks from
+0, so this holds up to 4.29 B vertices — beyond it, swap the packed
 long for a struct key).
 
 DuckDB twin: oracles.py::percolation_web_sql (recursive-CTE closure over the

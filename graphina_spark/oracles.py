@@ -28,7 +28,9 @@ def pagerank_web_sql(
     iters: int = PR_ITERS, d: float = PR_DAMPING, edges_cte: str = WEB_EDGES_CTE
 ) -> str:
     """Unrolled weighted PageRank with dangling-mass redistribution
-    (reference semantics, src/centrality/pagerank.rs:92-128)."""
+    (reference semantics, src/centrality/pagerank.rs:92-128).  Each round's
+    rank CTE is MATERIALIZED: the next round reads it twice (d and g), and
+    DuckDB inlines plain CTEs, so the plan would double every round."""
     ctes = [
         edges_cte.strip(),
         "verts AS (SELECT id FROM v)",
@@ -49,7 +51,7 @@ def pagerank_web_sql(
             f" FROM {p} r JOIN en ON r.id = en.src GROUP BY en.dst)"
         )
         ctes.append(
-            f"{c} AS (SELECT vv.id,"
+            f"{c} AS MATERIALIZED (SELECT vv.id,"
             f" {1.0 - d} / nn2.n + {d} * d{k}.dang / nn2.n"
             f" + {d} * coalesce(g{k}.gather, 0.0) AS pr"
             f" FROM verts vv LEFT JOIN g{k} ON vv.id = g{k}.id, nn2, d{k})"
@@ -148,7 +150,8 @@ def incremental_pagerank_web_sql(
 def personalized_pagerank_web_sql(iters: int = PR_ITERS, d: float = PR_DAMPING) -> str:
     """Unrolled personalized PageRank: teleport AND dangling mass follow the
     normalized personalization vector p (p_i ∝ [id % 10 == 0]) — reference
-    semantics personalized_pagerank.rs:98-107."""
+    semantics personalized_pagerank.rs:98-107.  Per-round rank CTEs are
+    MATERIALIZED, as in pagerank_web_sql."""
     ctes = [
         WEB_EDGES_CTE.strip(),
         "verts AS (SELECT id FROM v)",
@@ -172,7 +175,7 @@ def personalized_pagerank_web_sql(iters: int = PR_ITERS, d: float = PR_DAMPING) 
             f" FROM {p} r JOIN en ON r.id = en.src GROUP BY en.dst)"
         )
         ctes.append(
-            f"{c} AS (SELECT pv.id,"
+            f"{c} AS MATERIALIZED (SELECT pv.id,"
             f" {1.0 - d} * pv.p + {d} * d{k}.dang * pv.p"
             f" + {d} * coalesce(g{k}.gather, 0.0) AS pr"
             f" FROM pvec pv LEFT JOIN g{k} ON pv.id = g{k}.id, d{k})"
@@ -4580,7 +4583,8 @@ SELECT src, dst, CAST(cnt AS BIGINT) AS cnt FROM prs"""
 
 def _pr_chain(edges_src: str, verts_src: str, pfx: str, iters: int, d: float) -> list[str]:
     """Prefixed unrolled weighted-PageRank CTE chain (same trajectory as
-    pagerank_web_sql, parameterized so two graphs coexist in one query)."""
+    pagerank_web_sql, parameterized so two graphs coexist in one query;
+    per-round rank CTEs MATERIALIZED for the same reason)."""
     ctes = [
         f"{pfx}n AS (SELECT count(*) AS n FROM {verts_src})",
         f"{pfx}wout AS (SELECT src AS id, sum(weight) AS w_out FROM {edges_src}"
@@ -4600,7 +4604,7 @@ def _pr_chain(edges_src: str, verts_src: str, pfx: str, iters: int, d: float) ->
             f" FROM {p} r JOIN {pfx}en en ON r.id = en.src GROUP BY en.dst)"
         )
         ctes.append(
-            f"{c} AS (SELECT vv.id,"
+            f"{c} AS MATERIALIZED (SELECT vv.id,"
             f" {1.0 - d} / {pfx}n.n + {d} * {pfx}d{k}.dang / {pfx}n.n"
             f" + {d} * coalesce({pfx}g{k}.gather, 0.0) AS pr"
             f" FROM {verts_src} vv LEFT JOIN {pfx}g{k} ON vv.id = {pfx}g{k}.id,"

@@ -1,14 +1,14 @@
 """Iteration checkpointing with per-partition lineage + metrics.
 
-Spark gives us neither iteration nor resumability: an iterative kernel's
-lineage grows one join+agg per superstep and the plan blows up after ~10
-iterations.  The reference doesn't have this problem (it mutates in-memory
-vectors, src/centrality/pagerank.rs:67-127); our equivalent is **materialize
-every iteration to parquet and read it back**, which simultaneously
+Spark gives us no resumability: the reference mutates in-memory vectors
+(src/centrality/pagerank.rs:67-127), while a Spark kernel's state lives in
+a lineage.  The lineage itself is cut by ``plans/materialize.py::
+local_materialize`` every superstep; this module writes a **parquet
+snapshot of an iteration's state**, which
 
-1. cuts lineage (the read-back frame has a one-node plan),
-2. makes runs resumable mid-iteration (north rule), and
-3. records per-partition metrics + lineage in a manifest JSON.
+1. makes runs resumable mid-iteration (north rule: ``latest`` reads the
+   newest complete snapshot back), and
+2. records per-partition metrics + lineage in a manifest JSON.
 
 Layout (parquet stands in for Iceberg — the Iceberg runtime jars aren't in
 this image; the table layout is Iceberg-shaped: one directory per iteration
@@ -56,16 +56,15 @@ class CheckpointManager:
 
     def save(
         self,
-        spark: SparkSession,
         df: DataFrame,
         iteration: int,
         delta: float | None = None,
         extra: dict | None = None,
-    ) -> DataFrame:
-        """Write the iteration state, record the manifest, return the
-        read-back frame (fresh lineage).  The manifest is written *after* the
-        parquet commit, so an iteration without a manifest is incomplete and
-        ignored on resume — crash-consistent without a transaction log."""
+    ) -> None:
+        """Write the iteration state and record the manifest.  The manifest
+        is written *after* the parquet commit, so an iteration without a
+        manifest is incomplete and ignored on resume — crash-consistent
+        without a transaction log."""
         t0 = time.time()
         path = self._iter_dir(iteration)
         df.write.mode("overwrite").parquet(path)
@@ -93,8 +92,6 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path(iteration))
-        # the written schema: reading it back infers nothing, so no job
-        return spark.read.schema(df.schema).parquet(path)
 
     def latest(self, spark: SparkSession) -> tuple[int, DataFrame, dict] | None:
         """Most recent *complete* iteration (manifest present and matching

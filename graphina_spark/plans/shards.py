@@ -66,14 +66,13 @@ DEFAULT_SALT_CAP = 100_000
 class AdjShards:
     """Materialized adjacency shards + the hub-salt replication map."""
 
-    shards: DataFrame  # (bucket, salt, src, dst_list, w_list, degree, w_out)
+    shards: DataFrame  # (bucket, salt, src, dst_list, w_list, degree)
     salt_map: DataFrame  # (src, n_salt) — hubs only (n_salt > 1); broadcast side
     salted: bool  # some src has n_salt > 1; False: shards are partitioned
     # by src alone and the gather joins the ranks without salt_map
     wout: DataFrame  # (src, w_out, degree, _wlo, _whi) — scatter-active
     # vertices; _wlo/_whi are the per-src weight extrema behind the uniform
     # auto-detect
-    salt_cap: int
     uniform: bool  # True: w_list is NOT stored — every edge of a src
     # carries w_norm = 1/degree (auto-detected constant edge weight).
     # Cuts per-superstep adjacency scan traffic to 4 B/edge with compact=True
@@ -238,7 +237,6 @@ def _build(
             "weight",
             (F.col("weight") / F.col("w_out")).alias("w_norm"),
             "degree",
-            "w_out",
         )
         .withColumn("salt", ((rn - 1) / F.lit(salt_cap)).cast("int"))
         .drop("weight")
@@ -247,14 +245,12 @@ def _build(
     aggs = [
         F.collect_list(F.col("dst").cast(dst_t)).alias("dst_list"),
         F.first("degree").alias("degree"),
-        F.first("w_out").alias("w_out"),
     ]
     sink_cols = [
         F.col("src"),
         F.lit(0).cast("int").alias("salt"),
         F.array(F.lit(-1).cast(dst_t)).alias("dst_list"),
         F.lit(0).cast("long").alias("degree"),
-        F.lit(0.0).alias("w_out"),
     ]
     if not uniform:
         aggs.insert(
@@ -283,7 +279,6 @@ def _build(
         salt_map=salt_map,
         salted=salted,
         wout=wout,
-        salt_cap=salt_cap,
         uniform=uniform,
         owned=owned,
     )

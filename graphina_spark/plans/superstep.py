@@ -20,8 +20,8 @@ Materialization rule — every state (initial, resumed, stepped) is
 step's id-keyed join stays exchange-free (plans/materialize.py).  The first
 action that reads a state runs its materialization: the step's own action,
 the ``score`` or ``checkpoint.save`` (which writes the materialized frame,
-the score as the manifest's ``delta``; the frame, not the parquet read-back,
-carries the partitioning into the next step).  After each superstep's score
+the score as the manifest's ``delta``; the materialized frame carries the
+partitioning into the next step).  After each superstep's score
 and save the loop settles the previous state: if no action has computed it
 yet, one RDD-level ``count()`` does, so at most one uncomputed state is ever
 chained.  Only then are the frames that state was built from released; a
@@ -98,7 +98,7 @@ def run_supersteps(
                 new = local_materialize(step(state, cache), eager=False)
                 s = score(new, state) if score is not None else None
                 if checkpoint is not None:
-                    checkpoint.save(spark, new, it, delta=s)
+                    checkpoint.save(new, it, delta=s)
                 settle(state)
                 for df in held:
                     df.unpersist()

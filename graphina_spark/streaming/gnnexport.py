@@ -130,8 +130,8 @@ def run_incremental_sage_export(
         # detection, so it must only advance once the export for the batch
         # is durable — a crash between the two saves then replays the batch
         # into an idempotent recompute instead of silently skipping it
-        xck.save(sess, x2, it + 1, extra={"batch_id": batch_id})
-        eck.save(sess, e2, it + 1, extra={"batch_id": batch_id})
+        xck.save(x2, it + 1, extra={"batch_id": batch_id})
+        eck.save(e2, it + 1, extra={"batch_id": batch_id})
 
     return (
         edges.writeStream.foreachBatch(_fold)

@@ -132,7 +132,6 @@ def run_incremental_components(
         else:
             it, labels, _ = found
         ckpt.save(
-            sess,
             merge_components(labels, batch),
             it + 1,
             extra={"batch_id": batch_id},
@@ -259,9 +258,8 @@ def run_incremental_pagerank(
             store, ranks, batch, damping=damping, tol=tol, max_iter=max_iter,
             stats=stats,
         )
-        e_ckpt.save(sess, store2, it + 1, extra={"batch_id": batch_id})
+        e_ckpt.save(store2, it + 1, extra={"batch_id": batch_id})
         r_ckpt.save(
-            sess,
             pr,
             it + 1,
             delta=stats.get("delta"),

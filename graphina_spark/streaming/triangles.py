@@ -145,7 +145,6 @@ def run_incremental_triangles(
         else:
             it, state, _ = found
         ckpt.save(
-            sess,
             merge_triangles(state, batch),
             it + 1,
             extra={"batch_id": batch_id},

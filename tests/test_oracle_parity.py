@@ -74,6 +74,23 @@ def test_parity(spark, sf_dir, name):
     assert not mism, f"{len(mism)} mismatching rows; first: {mism[:3]}"
 
 
+@pytest.mark.parametrize("name", ["textrank_docs", "pagerank_parts"])
+def test_oracle_fits_memory(sf_dir, tmp_path, name):
+    """The unrolled PageRank-chain oracles run in 2 GB on 2 DuckDB threads.
+    Each round reads the previous round's ranks twice; unless that CTE is
+    MATERIALIZED, DuckDB inlines it and the plan doubles every round.  No
+    Spark: this guards the oracle SQL alone."""
+    con = duckdb.connect()
+    con.execute("SET threads=2")
+    con.execute("SET memory_limit='2GB'")
+    con.execute(f"SET temp_directory='{tmp_path}'")
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    assert con.execute(entrymod.oracle_sql()[name]).fetchall()
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0

@@ -5,21 +5,54 @@ from pyspark.sql import functions as F
 
 def test_global_cumsum_matches_serial(spark):
     from graphina_spark.plans.ordered import global_cumsum
+    from graphina_spark.session import pinned_conf
 
-    rows = [(i, (i * 37) % 101, (i % 7) + 1) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, k long, v long")
-    for p in (2, 7):
-        got = {
-            r["id"]: r["prefix"]
-            for r in global_cumsum(
-                df, ["k", "id"], "v", num_partitions=p
-            ).collect()
-        }
+    rows = [(i, (i * 37) % 101, (i % 7) + 1, (i * 11) % 5 - 2) for i in range(500)]
+    df = spark.createDataFrame(rows, "id long, k long, v long, w long")
+    order = sorted(rows, key=lambda r: (r[1], r[0]))
+    for p in ("2", "7"):
+        with pinned_conf(spark, {"spark.sql.shuffle.partitions": p}):
+            one = global_cumsum(df, ["k", "id"], "v").collect()
+            two_df = global_cumsum(df, ["k", "id"], ["v", "w"], out_col=["pv", "pw"])
+            two = two_df.collect()
+        # both sums share one sort: a single Window operator
+        plan = two_df._jdf.queryExecution().optimizedPlan().toString()
+        assert sum(ln.lstrip(" +-:").startswith("Window ") for ln in plan.splitlines()) == 1
         acc, want = 0, {}
-        for i, k, v in sorted(rows, key=lambda r: (r[1], r[0])):
+        for i, k, v, w in order:
             want[i] = acc
             acc += v
-        assert got == want  # independent of partition count
+        assert {r["id"]: r["prefix"] for r in one} == want  # any partition count
+        # two value columns: each gets its own exclusive prefix
+        av, aw, want2 = 0, 0, {}
+        for i, k, v, w in order:
+            want2[i] = (av, aw)
+            av, aw = av + v, aw + w
+        assert {r["id"]: (r["pv"], r["pw"]) for r in two} == want2
+
+
+def test_assign_dense_ids_is_sorted_distinct_rank(spark):
+    """(id, key) = the 0-based rank of the sorted distinct keys, as a long,
+    whatever the input order, duplicates and partition count."""
+    import random
+
+    from pyspark.sql.types import LongType
+
+    from graphina_spark.graph import assign_dense_ids
+    from graphina_spark.session import pinned_conf
+
+    keys = [f"k{(i * 7919) % 61:03d}" for i in range(300)]  # 61 distinct, dups
+    random.Random(5).shuffle(keys)
+    df = spark.createDataFrame([(k,) for k in keys], "key string").repartition(5)
+    want = {k: i for i, k in enumerate(sorted(set(keys)))}
+    for p in ("1", "3", "7"):
+        with pinned_conf(spark, {"spark.sql.shuffle.partitions": p}):
+            ids = assign_dense_ids(df, key="key")
+            got = ids.collect()
+        assert ids.columns == ["id", "key"]
+        assert ids.schema["id"].dataType == LongType()
+        assert len(got) == len(want)
+        assert {r["key"]: r["id"] for r in got} == want
 
 
 def test_packing_layout_is_contiguous_and_deterministic(spark, sf_dir):

@@ -106,7 +106,7 @@ def test_dangling_sink_shards_match_plain(spark):
     assert all(abs(ref[k] - pr_sink[k]) < 1e-12 for k in ref)
     assert abs(sum(pr_sink.values()) - 1.0) < 1e-9
     # sink shard rows exist exactly for the dangling vertices
-    sink_rows = sink.shards.where(F.col("w_out") == 0.0).collect()
+    sink_rows = sink.shards.where(F.col("degree") == 0).collect()
     assert {r["src"] for r in sink_rows} == {3, 4}
     assert all(list(r["dst_list"]) == [-1] for r in sink_rows)
     # wout carries no sink rows
