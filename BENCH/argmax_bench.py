@@ -2,9 +2,10 @@
 """Controlled three-way argmax comparison inside the LPA superstep.
 
 One session, one cached input, identical superstep work — only the
-per-vertex argmax formulation differs (window / max-struct / packed-long /
-max-then-min join).  This isolates the plans/argmax.py claim from the heap
-and input confounds the full scaling harness carries.
+per-vertex argmax formulation differs (window / max-struct / packed-long;
+the max-then-min join measured worst and was removed).  This isolates the
+plans/argmax.py claim from the heap and input confounds the full scaling
+harness carries.
 
     taskset -c 0-7 python BENCH/argmax_bench.py [--pages 1000000]
                                                 [--cores 8] [--rounds 3]
@@ -83,15 +84,10 @@ def main() -> None:
                            max_score=int(max_deg), max_tie=int(max_label),
                            strategy="packed")
 
-    def best_join(f):
-        return argmax_long(f, "id", "cnt", "label", out_tie="new_label",
-                           strategy="join")
-
     variants = {
         "window": best_window,
         "max_struct": best_struct,
         "packed": best_packed,
-        "join": best_join,
     }
     # untimed warmup (JIT/codegen)
     best_packed(freq()).count()

@@ -64,8 +64,7 @@ def worker(cores: int, pages: int, avg_out: int, iters: int) -> None:
     build_s = time.time() - t0
 
     t0 = time.time()
-    compact = os.environ.get("SPARK_GRAFT_SCALING_COMPACT", "1") == "1"
-    adj = build_adj_shards(g, compact=compact)
+    adj = build_adj_shards(g)
     adj.shards.count()
     shard_s = time.time() - t0
 

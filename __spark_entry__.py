@@ -524,7 +524,7 @@ def _q_pagerank_uniform_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNWEIGHTED shard gather: w_list is never stored — the
     gather computes w_norm = 1/degree on the fly (plans/shards.py uniform
     mode, auto-detected from the constant edge weight), cutting the
-    per-superstep adjacency scan to 4 B/edge with compact=True.  This is
+    per-superstep adjacency scan to 4 B/edge of int dsts.  This is
     the Common-Crawl serving shape (link graphs are unweighted).  Oracle =
     the standard unrolled PageRank SQL over the unit-weight edge set, so
     the driver certifies the computed-1/degree arithmetic exactly."""
@@ -538,7 +538,7 @@ def _q_pagerank_uniform_web(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, salt_cap=50, compact=True)
+    adj = build_adj_shards(gu, salt_cap=50)
     pr = pagerank(gu, damping=0.85, fixed_iters=5, tol=None, shards=adj)
     return pr.select("id", F.round("rank", ROUND).alias("pr"))
 

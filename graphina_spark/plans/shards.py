@@ -1,6 +1,6 @@
 """Salted, src-bucketed CSR-style adjacency shards — the scale layout.
 
-North-star storage: ``adj(bucket, salt, src, dst_list: array<long>,
+North-star storage: ``adj(bucket, salt, src, dst_list: array<int|long>,
 w_list: array<double>, degree: long)``.  The reference's analogue is the
 position-space CSR snapshot it builds before every hot loop
 (/root/reference/src/core/paths.rs:767-801, sprs CsMat round-trip at
@@ -70,14 +70,14 @@ class AdjShards:
     salt_map: DataFrame  # (src, n_salt) — hubs only (n_salt > 1); broadcast side
     salted: bool  # some src has n_salt > 1; False: shards are partitioned
     # by src alone and the gather joins the ranks without salt_map
-    wout: DataFrame  # (src, w_out, degree, _wlo, _whi) — scatter-active
-    # vertices; _wlo/_whi are the per-src weight extrema behind the uniform
-    # auto-detect
+    wout: DataFrame  # (src, w_out, degree, _wlo, _whi, _dlo, _dhi) —
+    # scatter-active vertices; the per-src weight and dst extrema behind the
+    # uniform auto-detect and the dst_list width
     uniform: bool  # True: w_list is NOT stored — every edge of a src
     # carries w_norm = 1/degree (auto-detected constant edge weight).
-    # Cuts per-superstep adjacency scan traffic to 4 B/edge with compact=True
-    # (vs 12 weighted-compact / 16 plain) — the memory-bus term that caps
-    # single-box scaling; Common-Crawl link graphs are exactly this shape.
+    # Cuts per-superstep adjacency scan traffic to 4 B/edge with int dsts
+    # (vs 12 weighted) — the memory-bus term that caps single-box scaling;
+    # Common-Crawl link graphs are exactly this shape.
     owned: list[DataFrame]  # the frames this build cached; the rest were
     # already cached by an earlier build over the same graph, whose entries
     # unpersist leaves in place
@@ -127,10 +127,10 @@ class AdjShards:
                 F.col("_v"),
             )
             .select(
-                # compact shards carry int dsts / float weights; the message
-                # schema is re-widened here so downstream plans are identical
+                # dsts are int or bigint (the build's choice); the message id
+                # is bigint either way, so downstream plans are identical
                 F.col("z.dst_list").cast("bigint").alias("id"),
-                (F.col("_v") * F.col("z.w_list").cast("double")).alias("_c"),
+                (F.col("_v") * F.col("z.w_list")).alias("_c"),
             )
             .groupBy("id")
             .agg(F.sum("_c").alias("gather"))
@@ -141,7 +141,6 @@ def build_adj_shards(
     g: LinkGraph,
     salt_cap: int = DEFAULT_SALT_CAP,
     dangling_sink: bool = True,
-    compact: bool = False,
 ) -> AdjShards:
     """Group the (symmetrized) edge set into capped, salted CSR rows whose
     w_list holds the PageRank scatter weights w(u,v)/w_out(u), plus one
@@ -158,33 +157,23 @@ def build_adj_shards(
     partitions — the rank frame's — by ``src`` (by ``(src, salt)`` when
     salted); ``bucket`` is the src hash bucket over that count.
 
-    ``compact=True`` stores ``dst_list`` as array<int> and ``w_list`` as
-    array<float> — 12 bytes/edge of superstep scan traffic instead of 16 at
-    identical row counts (every superstep re-reads the whole cached
-    adjacency, so this is the memory-bus term that caps single-box scaling
-    at high core counts; on a real cluster it is the network/cache term).
-    Requires vertex ids < 2³¹ (validated before anything is cached).  Ids
-    stay EXACT (integers); only w_norm is rounded to float32 — per-superstep
-    relative rank error ≤ 2⁻²³ ≈ 1.2e-7, and because the PageRank iteration
-    is a contraction with factor d the steady-state error is bounded by
-    1.2e-7/(1−d) ≈ 8e-7 < the north rule's allclose 1e-6 (tests pin
-    agreement ≤ 1e-6 against the float64 reference).
+    ``dst_list`` is array<int> when every dst id lies in [0, 2³¹), else
+    array<bigint>; the dst extrema ride the same wout aggregation and
+    reduce, so the choice costs no job.  ``w_list`` is array<double>.  The
+    int layout is 12 bytes/edge of superstep scan traffic instead of 16 (4
+    instead of 8 uniform) at identical row counts: every superstep re-reads
+    the whole cached adjacency, so this is the memory-bus term that caps
+    single-box scaling at high core counts (on a real cluster, the
+    network/cache term).
 
     A build that raises releases what it cached.
     """
     if not dangling_sink:  # the keyword stays accepted for older callers
         raise ValueError("dangling_sink=False is not supported: the shards "
                          "always carry the sink rows")
-    if compact and g.vertices.where(
-        (F.col("id") >= 2_147_483_648) | (F.col("id") < 0)
-    ).limit(1).count():
-        raise ValueError(
-            "build_adj_shards(compact=True) requires vertex ids in "
-            "[0, 2^31); use compact=False for wider id spaces"
-        )
     owned: list[DataFrame] = []
     try:
-        return _build(g, salt_cap, compact, owned)
+        return _build(g, salt_cap, owned)
     except BaseException:
         for df in owned:
             df.unpersist()
@@ -204,29 +193,33 @@ def _cache_new(
     return owned[-1]
 
 
-def _build(
-    g: LinkGraph, salt_cap: int, compact: bool, owned: list[DataFrame]
-) -> AdjShards:
+def _build(g: LinkGraph, salt_cap: int, owned: list[DataFrame]) -> AdjShards:
     spark = g.edges.sparkSession
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = g.symmetric_edges()
-    # per-src weight extrema piggyback on the wout aggregation, so the
-    # constant-weight auto-detect folds into the edge pass that
-    # materializes the wout cache anyway — no extra scan of sym
+    # per-src weight and dst extrema piggyback on the wout aggregation, so
+    # the constant-weight auto-detect and the dst width fold into the edge
+    # pass that materializes the wout cache anyway — no extra scan of sym
     wout = _cache_new(sym.groupBy("src").agg(
         F.sum("weight").alias("w_out"),
         F.count("*").alias("degree"),
         F.min("weight").alias("_wlo"),
         F.max("weight").alias("_whi"),
+        F.min("dst").alias("_dlo"),
+        F.max("dst").alias("_dhi"),
     ), owned)
     # constant edge weight => w_norm is exactly 1/degree, so w_list need
-    # not be stored or scanned; no src above salt_cap => no salt rows
+    # not be stored or scanned; no src above salt_cap => no salt rows;
+    # every dst in [0, 2^31) => int dsts (no edges: only the [-1] sinks)
     mm = wout.agg(
         F.min("_wlo").alias("lo"), F.max("_whi").alias("hi"),
         F.max("degree").alias("dmax"),
+        F.min("_dlo").alias("dlo"), F.max("_dhi").alias("dhi"),
     ).first()
     uniform = mm["lo"] is not None and mm["lo"] == mm["hi"]
     salted = mm["dmax"] is not None and mm["dmax"] > salt_cap
+    dst_t = "int" if mm["dlo"] is None or (
+        mm["dlo"] >= 0 and mm["dhi"] < 2**31) else "bigint"
 
     rn = F.row_number().over(Window.partitionBy("src").orderBy("dst", "weight"))
     e = (
@@ -241,7 +234,6 @@ def _build(
         .withColumn("salt", ((rn - 1) / F.lit(salt_cap)).cast("int"))
         .drop("weight")
     )
-    dst_t, w_t = ("int", "float") if compact else ("bigint", "double")
     aggs = [
         F.collect_list(F.col("dst").cast(dst_t)).alias("dst_list"),
         F.first("degree").alias("degree"),
@@ -253,10 +245,8 @@ def _build(
         F.lit(0).cast("long").alias("degree"),
     ]
     if not uniform:
-        aggs.insert(
-            1, F.collect_list(F.col("w_norm").cast(w_t)).alias("w_list")
-        )
-        sink_cols.insert(3, F.array(F.lit(1.0).cast(w_t)).alias("w_list"))
+        aggs.insert(1, F.collect_list("w_norm").alias("w_list"))
+        sink_cols.insert(3, F.array(F.lit(1.0)).alias("w_list"))
     sink_rows = (
         g.vertices.select(F.col("id").alias("src"))
         .join(wout.select("src"), "src", "left_anti")

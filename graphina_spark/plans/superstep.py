@@ -75,8 +75,10 @@ def run_supersteps(
     """Return the state after at most ``n_iters`` supersteps (resumed ones
     included) of ``state = step(state, cache)``, stopping early once
     ``score(new, old) < tol``.  ``cache(df)`` returns ``df`` cached and
-    owned by the loop.  ``init()`` runs only when nothing is resumed.
-    ``stats`` receives ``{"iterations", "delta"}`` (the last score).
+    owned by the loop.  ``init()`` runs only when nothing is resumed; a
+    resumed state whose manifest ``delta`` already met ``tol`` is returned
+    without a superstep.  ``stats`` receives ``{"iterations", "delta"}``
+    (the last score, or the resumed manifest's).
     ``release`` frames are unpersisted on every exit path."""
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty(_JOB_DESCRIPTION)
@@ -91,8 +93,13 @@ def run_supersteps(
         with pinned_conf(spark, _PINNED):
             sc.setJobDescription(f"{kernel}:init")
             found = checkpoint.latest(spark) if checkpoint is not None and resume else None
-            start, state = (found[0] + 1, found[1]) if found else (0, init())
+            start, state, delta = (0, init(), None) if not found else (
+                found[0] + 1, found[1], found[2]["delta"])
             state = local_materialize(state, eager=False)
+            if stats is not None:
+                stats.update(iterations=start, delta=delta)
+            if score is not None and delta is not None and delta < tol:
+                start = n_iters  # the checkpointed run already stopped
             for it in range(start, n_iters):
                 sc.setJobDescription(f"{kernel}:{it}")
                 new = local_materialize(step(state, cache), eager=False)

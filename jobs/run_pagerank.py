@@ -41,11 +41,6 @@ def main() -> None:
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--undirected", action="store_true")
     ap.add_argument("--salt-cap", type=int, default=100_000)
-    ap.add_argument(
-        "--compact", action="store_true",
-        help="int32/float32 shard arrays (ids < 2^31; rank error "
-             "<= 2^-23/(1-d), inside the allclose-1e-6 contract)",
-    )
     ap.add_argument("--checkpoint-dir")
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--resume", action="store_true")
@@ -86,7 +81,7 @@ def main() -> None:
             },
         )
 
-    adj = build_adj_shards(g, salt_cap=a.salt_cap, compact=a.compact)
+    adj = build_adj_shards(g, salt_cap=a.salt_cap)
     t0 = time.time()
     pr = pagerank(
         g,

@@ -106,15 +106,6 @@ def test_raising_build_leaves_cache_manager_empty(spark, monkeypatch, via):
     assert _cache_empty(spark)
 
 
-def test_compact_id_check_caches_nothing(spark):
-    g = make_graph(spark, [(0, 1)], n=2, directed=True)
-    g.vertices = spark.createDataFrame([(0,), (2**31 + 5,)], "id long")
-    spark.catalog.clearCache()
-    with pytest.raises(ValueError, match="2\\^31"):
-        build_adj_shards(g, compact=True)
-    assert _cache_empty(spark)
-
-
 @pytest.mark.parametrize("salt_cap", [100_000, 2], ids=["same_plan", "other_salt_cap"])
 def test_kernel_build_keeps_caller_shard_cache(spark, salt_cap):
     """Spark matches cache entries by plan, so the shards ``pagerank``

@@ -4,6 +4,7 @@ scores (north rule), manifest lineage gating, crash consistency."""
 import glob
 import json
 import os
+import re
 
 import pytest
 
@@ -132,3 +133,57 @@ def test_label_kernel_resume_reruns_only_tail(spark, tmp_path, kernel):
         assert last["delta"] is None
     else:
         assert last["delta"] == 0  # the changed-label count that stopped it
+
+
+def _launched(sc, call):
+    """``call()``'s result and the descriptions of the jobs it launched."""
+    jsc = sc._jsc.sc()
+
+    def jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        it = jsc.statusStore().jobsList(None).iterator()
+        out = {}
+        while it.hasNext():
+            j = it.next()
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    start = max(jobs(), default=-1)
+    result = call()
+    return result, [d for j, d in jobs().items() if j > start]
+
+
+# kernels run to their stop rule, keyed like RESUMABLE
+CONVERGING = {
+    "pagerank": (
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 0)],
+        lambda g, **kw: pagerank(g, tol=1e-6, **kw), "rank"),
+    "cc": RESUMABLE["cc"],
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(CONVERGING))
+def test_resume_after_convergence_runs_no_superstep(spark, tmp_path, kernel):
+    """A checkpointed run that met its stop rule resumes as it stopped: no
+    superstep job, no new manifest, the same output and stats."""
+    edges, call, col = CONVERGING[kernel]
+    g = make_graph(spark, edges, n=1 + max(max(e) for e in edges), directed=False)
+
+    def run(g, **kw):
+        return {r["id"]: r[col] for r in call(g, **kw).collect()}
+
+    ck = CheckpointManager(base=str(tmp_path), run_id=kernel, params={"k": kernel})
+    kw = {"stats": {}} if kernel == "pagerank" else {}
+    full = run(g, checkpoint=ck, **kw)
+    pattern = os.path.join(ck.run_dir, "manifest-*.json")
+    manifests = {p: os.stat(p).st_mtime_ns for p in glob.glob(pattern)}
+    assert json.load(open(max(manifests)))["delta"] is not None
+
+    rkw = {"stats": {}} if kernel == "pagerank" else {}
+    resumed, descs = _launched(
+        spark.sparkContext, lambda: run(g, checkpoint=ck, resume=True, **rkw))
+    assert not [d for d in descs if d and re.fullmatch(rf"{kernel}:\d+", d)]
+    assert {p: os.stat(p).st_mtime_ns for p in glob.glob(pattern)} == manifests
+    assert resumed == full
+    assert rkw == kw

@@ -121,44 +121,49 @@ def test_build_rejects_shards_without_sink(spark):
         build_adj_shards(g, salt_cap=2, dangling_sink=False)
 
 
-def test_compact_shards_match_f64_within_contract(spark, sf_dir):
-    # int32 dst / float32 w_norm layout: ids exact, ranks within the north
-    # rule's allclose 1e-6 of the float64 reference (error bound 2^-23/(1-d))
+def test_int_dst_shards_match_f64(spark, sf_dir):
+    # ids in [0, 2^31): int32 dsts, float64 weights — ranks match the
+    # float64 reference to rounding
     g = web_graph(spark, sf_dir)
-    cp = build_adj_shards(g, salt_cap=3, compact=True)
-    assert dict(cp.shards.dtypes)["dst_list"] == "array<int>"
-    assert dict(cp.shards.dtypes)["w_list"] == "array<float>"
+    adj = build_adj_shards(g, salt_cap=3)
+    assert dict(adj.shards.dtypes)["dst_list"] == "array<int>"
+    assert dict(adj.shards.dtypes)["w_list"] == "array<double>"
     ref = _ref_map(g, fixed_iters=10)
-    compact = _pr_map(
-        pagerank(g, fixed_iters=10, tol=None, shards=cp)
-    )
-    assert ref.keys() == compact.keys()
-    assert all(abs(ref[k] - compact[k]) < 1e-6 for k in ref)
-    cp.unpersist()
+    sharded = _pr_map(pagerank(g, fixed_iters=10, tol=None, shards=adj))
+    assert ref.keys() == sharded.keys()
+    assert all(abs(ref[k] - sharded[k]) < 1e-12 for k in ref)
+    adj.unpersist()
 
 
-def test_compact_shards_reject_wide_ids(spark):
-    g = make_graph(spark, [(0, 1)], n=2, directed=True)
-    g.vertices = spark.createDataFrame(
-        [(0,), (2**31 + 5,)], "id long"
-    )
-    with pytest.raises(ValueError, match="2\\^31"):
-        build_adj_shards(g, compact=True)
+@pytest.mark.parametrize("wide", [2**31 + 5, -7], ids=["above_int32", "negative"])
+def test_wide_dst_shards_are_bigint(spark, wide):
+    # a dst outside [0, 2^31) keeps bigint dsts; PageRank is unchanged
+    g = make_graph(spark, [(0, 1), (1, wide), (wide, 0), (1, 0)],
+                   directed=True, weights=[1.0, 2.0, 0.5, 3.0])
+    adj = build_adj_shards(g)
+    assert dict(adj.shards.dtypes)["dst_list"] == "array<bigint>"
+    assert dict(adj.shards.dtypes)["w_list"] == "array<double>"
+    ref = _ref_map(g, fixed_iters=8)
+    sharded = _pr_map(pagerank(g, fixed_iters=8, tol=None, shards=adj))
+    assert ref.keys() == sharded.keys()
+    assert all(abs(ref[k] - sharded[k]) < 1e-12 for k in ref)
+    adj.unpersist()
 
 
-def test_compact_shards_accept_int32_max_id(spark):
-    # 2^31-1 is a valid int32 value and inside the documented [0, 2^31)
-    # range — the guard must not reject it (regression: off-by-one)
+def test_int32_max_dst_shards_are_int(spark):
+    # 2^31-1 is a valid int32 value and inside [0, 2^31) — it must still
+    # select int dsts (regression: off-by-one)
     g = make_graph(spark, [(0, 2**31 - 1)], directed=True)
-    cp = build_adj_shards(g, compact=True)
-    row = cp.shards.where(F.col("src") == 0).first()
+    adj = build_adj_shards(g)
+    assert dict(adj.shards.dtypes)["dst_list"] == "array<int>"
+    row = adj.shards.where(F.col("src") == 0).first()
     assert row is not None and row["dst_list"] == [2**31 - 1]
-    cp.unpersist()
+    adj.unpersist()
 
 
 def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
-    # unit-weight projection: auto-detect drops w_list (4 B/edge compact
-    # scan) and the computed 1/degree gather matches the float64
+    # unit-weight projection: auto-detect drops w_list (4 B/edge scan of
+    # int dsts) and the computed 1/degree gather matches the float64
     # reference to ~1 ulp (far inside the 1e-6 contract)
     from graphina_spark.graph import LinkGraph
 
@@ -168,7 +173,7 @@ def test_uniform_shards_auto_detect_and_match_plain(spark, sf_dir):
         edges=g.edges.select("src", "dst", F.lit(1.0).alias("weight")),
         directed=True,
     )
-    adj = build_adj_shards(gu, compact=True)
+    adj = build_adj_shards(gu)
     assert adj.uniform is True
     assert "w_list" not in adj.shards.columns
     ref = _ref_map(gu, fixed_iters=5)
