@@ -31,11 +31,12 @@ def assign_dense_ids(df: DataFrame, key: str = "url") -> DataFrame:
     the distinct ``key`` values — deterministic and scalable.
 
     The rank is the exclusive global prefix sum of a column of ones over the
-    sorted distinct keys (plans/ordered.py::global_cumsum, the two-pass
-    range-partitioned prefix; no single-task global window), so ids are
-    reproducible across runs and cluster sizes (reference analogue: the
-    attribute-keyed node dedupe + stable id map, src/core/io.rs:113-118 and
-    pygraphina/src/core/id_map.rs).
+    sorted distinct keys (plans/ordered.py::global_cumsum: one range
+    partitioning, pinned by the job that sums its partitions, and a
+    per-partition window plus literal offsets; no single-task global
+    window), so ids are reproducible across runs and cluster sizes
+    (reference analogue: the attribute-keyed node dedupe + stable id map,
+    src/core/io.rs:113-118 and pygraphina/src/core/id_map.rs).
     """
     from graphina_spark.plans.ordered import global_cumsum
 

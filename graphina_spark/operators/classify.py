@@ -245,35 +245,12 @@ def classifier_calibration(
 
 def classifier_auc(scored: DataFrame, labels: DataFrame) -> DataFrame:
     """One row (auc, npos, nneg) — tie-aware Mann-Whitney AUC of the
-    classifier probabilities against teacher labels (the links-family AUC
-    tail on doc scores: probs are already 6-dp rounded, so tie groups are
-    engine-identical; grouped ranks via the two-pass global prefix sum —
-    no single-task window)."""
-    from graphina_spark.plans.ordered import global_cumsum
+    classifier probabilities against teacher labels: the links family's
+    AUC tail (plans/ordered.py::rank_auc) on doc scores.  Probs are already
+    6-dp rounded, so tie groups are engine-identical."""
+    from graphina_spark.plans.ordered import rank_auc
 
-    s = (
+    return rank_auc(
         scored.select("id", F.col("prob").alias("score"))
         .join(labels.select("id", F.col("y").cast("int").alias("label")), "id")
-    )
-    grp = s.groupBy("score").agg(
-        F.count("*").alias("cnt"), F.sum("label").alias("pos_c")
-    )
-    laid = global_cumsum(grp, order_cols=["score"], value_col="cnt", out_col="below")
-    agg = laid.agg(
-        F.sum("pos_c").alias("p"),
-        F.sum("cnt").alias("t"),
-        F.sum(F.col("pos_c") * (F.col("below") + (F.col("cnt") + 1) / 2.0)).alias("rpos"),
-    )
-    return agg.select(
-        F.round(
-            F.when(
-                (F.col("p") == 0) | (F.col("t") - F.col("p") == 0), F.lit(0.5)
-            ).otherwise(
-                (F.col("rpos") - F.col("p") * (F.col("p") + 1) / 2.0)
-                / (F.col("p") * (F.col("t") - F.col("p")))
-            ),
-            6,
-        ).alias("auc"),
-        F.col("p").cast("long").alias("npos"),
-        (F.col("t") - F.col("p")).cast("long").alias("nneg"),
     )

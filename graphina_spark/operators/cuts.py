@@ -149,7 +149,7 @@ def sweep_cut(g: LinkGraph, scores: DataFrame, score_col: str = "score") -> Data
     )
 
     # inclusive (volume, cut) profiles: both exclusive prefixes in one
-    # global_cumsum (one range partitioning, one offsets job, one window),
+    # global_cumsum (one range partitioning, one sums job, one window),
     # plus the row's own value
     pre = global_cumsum(rv, ["rank"], ["deg", "dlt"], out_col=["_pd", "_pc"]).select(
         "rank",

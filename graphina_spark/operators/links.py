@@ -342,8 +342,8 @@ def link_prediction_auc(
 
     Scale shape: the wedge kernel (one self-join + one groupBy, hub-capped),
     one groupBy(score) whose size is bounded by #distinct scores, and a
-    two-pass global prefix sum (plans/ordered.py::global_cumsum) for the
-    rank cumsum — NO single-task global window.  DuckDB twin:
+    global prefix sum (plans/ordered.py::rank_auc over global_cumsum) for
+    the rank cumsum — NO single-task global window.  DuckDB twin:
     oracles.py::linkpred_auc_web_sql.
     """
     pos = _canon_pairs(g)
@@ -363,8 +363,8 @@ def _pairwise_auc(
     g: LinkGraph, pos: DataFrame, neg: DataFrame, score: str
 ) -> DataFrame:
     """Shared AUC tail: label the canonical (u, v) candidate frames, score
-    with the wedge kernel of ``g``, rank via the two-pass prefix sum."""
-    from graphina_spark.plans.ordered import global_cumsum
+    with the wedge kernel of ``g``, rank via plans/ordered.py::rank_auc."""
+    from graphina_spark.plans.ordered import rank_auc
 
     pairs = pos.withColumn("label", F.lit(1)).unionAll(
         neg.withColumn("label", F.lit(0))
@@ -372,33 +372,9 @@ def _pairwise_auc(
     sc = F.coalesce(F.col(score), F.lit(0))
     if score in ("aa", "ra"):
         sc = F.round(sc, 6)
-    scored = (
+    return rank_auc(
         pairs.join(_pair_stats(g).select("u", "v", score), ["u", "v"], "left")
         .select("label", sc.alias("score"))
-    )
-    grp = scored.groupBy("score").agg(
-        F.count("*").alias("cnt"), F.sum("label").alias("pos_c")
-    )
-    laid = global_cumsum(grp, order_cols=["score"], value_col="cnt", out_col="below")
-    agg = laid.agg(
-        F.sum("pos_c").alias("p"),
-        F.sum("cnt").alias("t"),
-        F.sum(F.col("pos_c") * (F.col("below") + (F.col("cnt") + 1) / 2.0)).alias(
-            "rpos"
-        ),
-    )
-    return agg.select(
-        F.round(
-            F.when(
-                (F.col("p") == 0) | (F.col("t") - F.col("p") == 0), F.lit(0.5)
-            ).otherwise(
-                (F.col("rpos") - F.col("p") * (F.col("p") + 1) / 2.0)
-                / (F.col("p") * (F.col("t") - F.col("p")))
-            ),
-            6,
-        ).alias("auc"),
-        F.col("p").cast("long").alias("npos"),
-        (F.col("t") - F.col("p")).cast("long").alias("nneg"),
     )
 
 
@@ -431,7 +407,7 @@ def future_link_auc(
     score is an honest generalization readout.
 
     Same scale shape as link_prediction_auc (one wedge kernel on the old
-    graph, keyed anti-joins, grouped two-pass rank sum).  DuckDB twin:
+    graph, keyed anti-joins, grouped prefix rank sum).  DuckDB twin:
     oracles.py::future_auc_web_sql."""
     canon_old = _canon_pairs(g_old)
     pos = _canon_pairs(g_new).join(canon_old, ["u", "v"], "left_anti")

@@ -230,7 +230,7 @@ def multilevel_partition(
     # inflow — they never evict.  Round-robin over the dense rank of
     # (nw desc, id asc) interleaves heavy and light groups, so every part
     # starts within a couple of fine vertices of n/k.  The rank is
-    # assign_dense_ids (the two-pass prefix sum of plans/ordered.py) over a
+    # assign_dense_ids (the one-pass prefix sum of plans/ordered.py) over a
     # composite key (nw ∈ {1,2} ⇒ key = (2-nw)·m + id orders exactly like
     # (nw desc, id asc)); no single-task global window.
     from graphina_spark.graph import assign_dense_ids

@@ -14,7 +14,7 @@ Scale shape:
 
 - stub explosion is ``sequence(0, deg-1)`` per vertex — output exactly 2m
   rows, map-side only;
-- the global rank uses the two-pass range-partitioned prefix sum
+- the global rank uses the one-pass range-partitioned prefix sum
   (plans/ordered.py::global_cumsum) — NO single-task global window;
 - pairing is ONE groupBy on ``rank // 2`` (2m rows, two per group).
 

@@ -15,10 +15,11 @@ closed-form:
     seq_first  = start_tok // seq_len,   off_first = start_tok % seq_len
     seq_last   = (start_tok + n_tokens - 1) // seq_len   (empty docs: seq_first)
 
-Scale shape: ONE range shuffle + an O(#partitions) offsets job
-(plans/ordered.py::global_cumsum — the two-pass prefix-sum pattern); token
-counting is the frozen whole-stage-codegen token convention.  No global
-single-task window, no driver-side corpus state.
+Scale shape: two shuffles, the range shuffle and the window's exchange on
+the partition id, plus an O(#partitions) sums job (the one-pass prefix sum
+of plans/ordered.py::global_cumsum); token counting is the frozen
+whole-stage-codegen token convention.  No global single-task window, no
+driver-side corpus state.
 """
 
 from __future__ import annotations

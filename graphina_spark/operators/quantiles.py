@@ -9,7 +9,7 @@ instead:
 1. value histogram — one keyed aggregation, output bounded by the number
    of DISTINCT values (for doc-length-like columns, thousands at most,
    independent of corpus size);
-2. exclusive global prefix sum over the histogram via the two-pass
+2. exclusive global prefix sum over the histogram via the one-pass
    range-partitioned pattern (plans/ordered.py::global_cumsum — no
    single-task window even if the value domain grows);
 3. quantile k/q = min value whose inclusive cumulative count ≥

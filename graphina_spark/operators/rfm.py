@@ -12,7 +12,7 @@ the final tie-break ((metric, uid) ascending; recency ranks DESCENDING on
 days-since so fresher = higher score).  Exact integers end to end.
 
 Scale shape: one groupBy(user) aggregation (map-side combined), then three
-global rank assignments via the two-pass range-partition cumsum pattern —
+global rank assignments via the one-pass range-partition cumsum pattern —
 but since the ranked frame is ALREADY one row per user (≤ users, not
 events), a plain window over a range partitioning is acceptable at any
 realistic user count; we reuse plans/ordered.py::global_cumsum to keep the

@@ -10,7 +10,7 @@ keep nodes passing the predicate, incident edges of dropped nodes removed),
 Spark shapes: retain/map are pure projections/filters (no shuffle beyond the
 semi-joins that drop incident edges, both keyed on the vertex id — broadcast
 when the retained vertex set is small); matrix conversion ranks ids with
-graph.assign_dense_ids (the two-pass prefix sum of plans/ordered.py) rather
+graph.assign_dense_ids (the one-pass prefix sum of plans/ordered.py) rather
 than a single global window.  Dense matrices (types.rs:524-568) are a deliberate non-goal:
 a 10^12-vertex dense adjacency cannot exist — the COO/CSR-style triplet
 DataFrame is the at-scale carrier.
@@ -104,7 +104,7 @@ def to_sparse_adjacency(g: LinkGraph) -> DataFrame:
     reference's ``add_triplet(j, i, ...)`` for i != j.
 
     Dense ranking uses assign_dense_ids (plans/ordered.py::global_cumsum,
-    the two-pass range-partitioned prefix sum — no single-task global
+    the one-pass range-partitioned prefix sum — no single-task global
     window), so this holds at 10^9 vertices."""
     ids = assign_dense_ids(
         g.vertices.select(F.col("id").alias("vid")), "vid"

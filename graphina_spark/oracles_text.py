@@ -681,7 +681,7 @@ def pack_docs_sql(seq_len: int = 512, salt: str = "pack") -> str:
     """Mirror of operators/packing.py::pack_documents — deterministic
     md5-shuffled contiguous packing; the oracle computes the exclusive
     prefix sum with one window (fine at sf scale; the Spark side uses the
-    two-pass range-partition pattern)."""
+    one-pass range-partition pattern)."""
     return f"""WITH {_TOK},
  base AS (SELECT CAST(doc_id AS BIGINT) AS doc_id,
                  md5('{salt}:' || CAST(doc_id AS VARCHAR)) AS key,

@@ -74,3 +74,39 @@ def test_packing_layout_is_contiguous_and_deterministic(spark, sf_dir):
         pos += r["n_tokens"]
     total = sum(r["n_tokens"] for r in laid)
     assert pos == total and total > 0
+
+
+def test_global_cumsum_is_one_pass(spark):
+    """The call launches two jobs, the range sampling and the partition
+    sums; the sums job computes the pinned partitions, so a collect of the
+    result launches one job and every later collect reads the same rows.
+    The offsets are a literal: the plan holds the pin as its only
+    ``LogicalRDD`` and no join."""
+    from graphina_spark.plans.ordered import global_cumsum
+    from graphina_spark.session import pinned_conf
+
+    sc = spark.sparkContext
+    listeners = sc._jsc.sc().listenerBus()
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc._jsc.clearJobGroup()
+        listeners.waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df = spark.range(2000).select(
+        "id", ((F.col("id") * 37) % 101).alias("k"), (F.col("id") % 7).alias("v")
+    )
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "4"}
+    with pinned_conf(spark, conf):
+        res, n_call = jobs("cumsum-call", lambda: global_cumsum(df, ["k", "id"], "v"))
+        first, n_collect = jobs("cumsum-collect", res.collect)
+        second = res.collect()
+    assert (n_call, n_collect) == (2, 1)
+    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
+    plan = res._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1
+    assert "Join" not in plan
